@@ -320,7 +320,7 @@ def _rp_oracle() -> str:
     odd = ", ".join(f"'{c}'" for c in _ODD_HEX)
     dims = ",\n           ".join(
         f"CAST(ROUND(SUM(tfidf * (CASE WHEN substring(md5(tok), {k + 1}, 1) IN ({odd})"
-        f" THEN -1.0 ELSE 1.0 END)), 4) AS DOUBLE) AS e{k}"
+        f" THEN -1.0 ELSE 1.0 END)), 4) + 0.0 AS DOUBLE) AS e{k}"
         for k in range(RP_DIM)
     )
     return f"""
@@ -376,10 +376,16 @@ def q_rp_embed(spark, sf_dir):
     # one select, not a withColumn chain: each withColumn re-analyzes a
     # fresh plan, so building k dims chained costs O(k²) driver-side
     # analysis per construction (r15; expressions unchanged)
+    # `+ 0.0` (also in the oracle) normalizes the sign of zero: for a
+    # sum in (-0.00005, 0) DuckDB's ROUND returns -0.0 and Spark's 0.0,
+    # and -0.0 + 0.0 = 0.0 under IEEE 754.
     return signed.select(
         "doc_id", *[_t(k).alias(f"_t{k}") for k in range(RP_DIM)]
     ).groupBy("doc_id").agg(
-        *[F.round(F.sum(f"_t{k}"), 4).cast("double").alias(f"e{k}") for k in range(RP_DIM)]
+        *[
+            (F.round(F.sum(f"_t{k}"), 4) + F.lit(0.0)).cast("double").alias(f"e{k}")
+            for k in range(RP_DIM)
+        ]
     )
 
 

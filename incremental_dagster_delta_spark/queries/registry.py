@@ -26,20 +26,11 @@ class QuerySpec:
     bench: bool = False  # include in bench.py headline set
 
 
-# THE whitespace tokenizer, in both dialects — one definition for the
-# 11 query modules that tokenize documents.text (r15 review: the SQL
-# string was copy-pasted per module and the Spark twin inlined per
-# query; the oracle/Spark pairing only stays aligned while every copy
-# is edited in lockstep).
+# THE whitespace tokenizer in DuckDB SQL — one definition for every
+# query module whose oracle tokenizes documents.text (r15 review: the
+# SQL string was copy-pasted per module, and the oracles only stay
+# aligned while every copy is edited in lockstep).
 TOKS_SQL = "list_filter(string_split(lower(text), ' '), x -> x <> '')"
-
-
-def toks_col(col: str = "text"):
-    """Spark twin of :data:`TOKS_SQL`: lower-cased whitespace tokens
-    with empties dropped."""
-    from pyspark.sql import functions as F
-
-    return F.filter(F.split(F.lower(col), " "), lambda x: x != F.lit(""))
 
 
 QUERIES: dict[str, QuerySpec] = {}

@@ -20,40 +20,29 @@ Set ``format="delta"`` on a cluster with delta-spark to get ACID semantics;
 the API is format-agnostic.
 
 Concurrent-writer guarantee matrix (test-backed in
-``tests/test_concurrent_writers.py``), vs the reference's delta-rs
-transactions:
+``tests/test_concurrent_writers.py`` and ``tests/test_commit_protocol.py``),
+vs the reference's delta-rs transactions. Every ``append_batch`` commits
+with ONE atomic put-if-absent of its ``_commits/{batch_id}`` marker
+(:func:`_put_if_absent`); files enter the table tree only after that
+commit:
 
 - **distinct batch ids, any partitions (disjoint or overlapping)**:
   concurrent ``append_batch`` calls commute — each batch has its own
   staging dir, its own ``b{batch_id}-`` file-name prefix, and its own
   commit marker, so renames never collide and both commits land.
 - **same batch id, serialized** (micro-batch replay after restart): the
-  second writer observes the commit marker and no-ops — exactly-once.
-- **same batch id, truly concurrent**: exactly one writer publishes. A
-  per-batch writer lease decided by lock-file ELECTION (each writer
-  creates its own uniquely-named entrant file — nothing is ever
-  overwritten, so no torn-write state — then after a settle interval
-  the minimal (mtime, token) entrant wins; re-checked as a fence before
-  publish and again before the commit marker) serializes the race:
-  losers WAIT (bounded by ``lease_ttl_ms``) — if the winner commits,
-  the waiter observes the marker and no-ops; if the winner crashed, its
-  entry ages out and the next election takes over and replays. A LIVE
-  holder is never aged out: it heartbeats a ``<token>.hb`` sidecar
-  between staging and publish and periodically during the rename loop,
-  and liveness is judged on max(entrant, heartbeat) mtime while the
-  election ORDER key stays the immutable entrant mtime — so a slow
-  append longer than the TTL cannot be usurped mid-publish (ADVICE r8)
-  (streaming restarts within the TTL self-heal instead of
-  crash-looping). The marker is re-checked after winning, so a writer
-  whose pre-lease marker check raced just ahead of another writer's
-  commit serializes to a no-op rather than re-publishing. Spark's
-  streaming checkpoint serializes micro-batch replays, so the
-  concurrent case cannot arise from the pipeline; the lease covers
-  out-of-pipeline double-drives. The guarantee is best-effort at the
-  margins — the election assumes settle > the store's mtime granularity
-  and fences are re-checked, not CAS'd (a real Delta log closes that
-  window with an optimistic-CAS commit); every straightforwardly raced
-  execution publishes the batch exactly once, never silently doubles.
+  second writer observes the commit marker, finishes any pending
+  roll-forward, and no-ops — exactly-once.
+- **same batch id, truly concurrent** (impossible from the checkpointed
+  pipeline, possible from an out-of-pipeline double-drive): each writer
+  stages privately; exactly one wins the marker and publishes, every
+  other returns False without touching the table. No waiting, no
+  timeouts, no clock assumptions.
+- **crash between commit and roll-forward**: the batch is committed but
+  only partly visible until a replay of it, or ``recover()`` (which
+  ``vacuum()`` runs first), completes the idempotent roll-forward. This
+  is the one window the protocol leaves open; a real Delta log closes
+  it by making the log entry itself the file list.
 - **append racing a MAINTENANCE rewrite (compact / purge / overwrite)**:
   best-effort salvage, not a full guarantee. Row-preserving rewrites and
   purge record the file names they READ (the ``consumed`` fence); at
@@ -74,20 +63,16 @@ transactions:
 from __future__ import annotations
 
 import json
+import os
 import posixpath
-import threading
-import time
 import urllib.parse
 import uuid
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-
-class ConcurrentWriterError(RuntimeError):
-    """Raised when a second writer races the same ``batch_id`` — the
-    loud-failure half of the concurrent-writer guarantee matrix above."""
 
 
 class CheckConstraintViolation(RuntimeError):
@@ -200,6 +185,53 @@ def _salvage_unconsumed_data_files(
             fs.rename(p, dst)
 
 
+def _put_if_absent(fs, tmp, dst) -> bool:
+    """Atomically publish the fully written file ``tmp`` as ``dst``
+    unless ``dst`` already exists; True when this call created ``dst``.
+    ``tmp`` is consumed either way. The commit primitive of
+    ``append_batch``: of any number of racing callers, exactly one wins.
+
+    Local paths hard-link (``link(2)`` fails with EEXIST, never
+    replaces); other Hadoop schemes rename with ``Options.Rename.NONE``,
+    which refuses an existing destination."""
+    src, dst = fs.makeQualified(tmp), fs.makeQualified(dst)
+    try:
+        if fs.getScheme() == "file":
+            try:
+                os.link(src.toUri().getPath(), dst.toUri().getPath())
+            except FileExistsError:
+                return False
+            return True
+        jvm = SparkContext._jvm
+        Rename = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
+        opts = SparkContext._gateway.new_array(Rename, 1)
+        opts[0] = Rename.NONE
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri(), fs.getConf())
+        try:
+            fc.rename(src, dst, opts)
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getSimpleName() == "FileAlreadyExistsException":
+                return False
+            raise
+        return True
+    finally:
+        fs.delete(src, False)
+
+
+def _read_json(fs, p) -> dict:
+    """The JSON document in file ``p``; ``{}`` when it is empty or
+    unreadable."""
+    try:
+        stream = fs.open(p)
+        try:
+            data = bytes(stream.readAllBytes())
+        finally:
+            stream.close()
+        return json.loads(data.decode("utf-8")) if data else {}
+    except Exception:
+        return {}
+
+
 def _sidecar_entries(fs, Path, path: str) -> list[dict]:
     """Every parseable JSON doc at ``path`` PLUS any ``.tmp-*`` leftovers.
     The writer half (:func:`_sidecar_replace`) replaces via write-tmp →
@@ -272,18 +304,11 @@ class PartitionedTable:
         path: str,
         partition_cols: list[str],
         fmt: str = "parquet",
-        lease_ttl_ms: int = 300_000,
-        lease_settle_s: float = 0.05,
     ) -> None:
         self.spark = spark
         self.path = path
         self.partition_cols = list(partition_cols)
         self.fmt = fmt
-        self.lease_ttl_ms = lease_ttl_ms
-        self.lease_settle_s = lease_settle_s
-        # token → entrant mtime recorded at election win; fences compare
-        # against this settled key rather than current minimality
-        self._won_mtime: dict[str, int] = {}
 
     # -- writes ------------------------------------------------------------
 
@@ -820,367 +845,135 @@ class PartitionedTable:
     # -- idempotent streaming append (exactly-once per micro-batch) ---------
 
     def append_batch(self, df: DataFrame, batch_id: int) -> bool:
-        """Exactly-once append for ``foreachBatch`` bodies.
+        """Exactly-once append for ``foreachBatch`` bodies; True when this
+        call committed rows.
 
         Plain ``append`` inside ``foreachBatch`` is at-least-once: a crash
         after the write but before the checkpoint commit replays the batch
         and duplicates rows (Delta solves this with txnAppId/txnVersion;
         reference Delta writes at delta_io.py:112-116 are transactional).
-        This gives parquet tables the same guarantee:
+        This gives parquet tables the same guarantee with one atomic
+        put-if-absent commit marker per batch:
 
-        1. skip entirely if a commit marker for ``batch_id`` exists;
-        2. delete any files from a previous partial publish of this batch
-           (identifiable — published names carry a ``b{batch_id}-`` prefix);
-        3. write to a staging dir with ``mode("overwrite")`` (idempotent);
-        4. rename each staged file into the final partition dir under its
-           deterministic prefixed name (rename is atomic per file);
-        5. write the commit marker.
+        1. if ``_commits/{batch_id}`` exists, finish any pending
+           roll-forward of that commit and return False (replay no-op);
+        2. validate, then stage the rows into a private
+           ``_staging/batch={batch_id}-{token}`` dir;
+        3. commit: create the marker ``{"rows", "writer": token}`` with
+           :func:`_put_if_absent`. Exactly one writer of a batch id wins;
+           a loser deletes its staging dir and returns False;
+        4. roll forward: the winner renames its staged files into the
+           table as ``b{batch_id}-{token}-…`` and deletes every other
+           ``_staging/batch={batch_id}-*`` dir (:meth:`_roll_forward`).
 
-        A replay from any crash point re-runs 2-5 and converges to exactly
-        one copy of the batch.
-
-        A same-batch-id TRULY-CONCURRENT second writer (impossible from
-        the checkpointed pipeline, possible from an out-of-pipeline
-        double-drive) is detected by the per-batch writer lease and
-        fails with :class:`ConcurrentWriterError` before it can publish
-        — see the guarantee matrix in the module docstring.
+        Nothing enters the table tree before the commit, so a crash
+        before step 3 leaves only hidden staging (removed by the next
+        winner or ``vacuum()``). A crash inside step 4 leaves the batch
+        committed but partly visible until a replay (step 1) or
+        ``recover()`` completes the idempotent roll-forward.
         """
         jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
         Path = jvm.org.apache.hadoop.fs.Path
-        root = Path(self.path)
-        fs = root.getFileSystem(hconf)
+        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         marker = Path(posixpath.join(self.path, "_commits", str(batch_id)))
         if fs.exists(marker):
+            self._roll_forward(fs, Path, batch_id, _read_json(fs, marker).get("writer"))
             return False
-        # validate BEFORE the lease: a rejected batch must not hold (or
-        # even contend for) the writer election
         self._validate_constraints(df)
-        token = self._acquire_lease(fs, Path, batch_id, marker)
-        if token is None:  # committed while we waited on a live lease
-            return False
-        # Heartbeat from election to release on a daemon thread: the
-        # staging write is an opaque blocking JVM call that can exceed
-        # the TTL on its own, so in-line beats between steps are not
-        # enough — a live holder must never be aged out mid-append
-        # (ADVICE r8).
-        stop_beat = self._start_heartbeat(fs, Path, batch_id, token)
-        try:
-            # Re-check the marker now that WE hold the lease: a writer
-            # whose pre-lease marker check raced just ahead of another
-            # writer's commit must serialize to a no-op here, not
-            # re-publish an already-committed batch (ADVICE r7).
-            if fs.exists(marker):
-                return False
-            return self._append_batch_locked(
-                df, batch_id, jvm, fs, Path, root, marker, token
-            )
-        finally:
-            stop_beat()
-            self._release_lease(fs, Path, batch_id, token)
-
-    def _lease_dir(self, Path, batch_id: int):
-        return Path(posixpath.join(self.path, "_commits", f"{batch_id}.lease.d"))
-
-    def _entrant_path(self, Path, batch_id: int, token: str):
-        return Path(
-            posixpath.join(self.path, "_commits", f"{batch_id}.lease.d", token)
-        )
-
-    def _live_entrants(self, fs, d, keep_token: str | None = None) -> list[tuple[int, str]]:
-        """Sorted (mtime_ms, token) of live entrant files under the lease
-        dir; entries older than ``lease_ttl_ms`` belong to crashed
-        holders and are dropped (and best-effort deleted) on the way.
-
-        Liveness and election ORDER are judged on different clocks: the
-        order key is the entrant file's mtime, which is never rewritten
-        (so the election outcome is stable), while liveness is
-        max(entrant mtime, ``<token>.hb`` heartbeat mtime) — a holder
-        mid-publish refreshes only the sidecar, staying alive without
-        re-entering the election (ADVICE r8: before this split, any
-        append slower than the TTL was deterministically usurped while
-        its renames were still landing). ``keep_token`` additionally
-        exempts the CALLER'S OWN entrant from the TTL as before. Orphan
-        stale heartbeats (entrant already deleted) are swept too."""
-        if not fs.exists(d):
-            return []
-        entrants: dict[str, tuple[int, object]] = {}
-        beats: dict[str, tuple[int, object]] = {}
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            mod = st.getModificationTime()
-            if name.endswith(".hb"):
-                beats[name[:-3]] = (mod, st.getPath())
-            else:
-                entrants[name] = (mod, st.getPath())
-        out = []
-        now = int(time.time() * 1000)
-        for name, (mod, p) in entrants.items():
-            live_mod = max(mod, beats.get(name, (mod, None))[0])
-            if name != keep_token and now - live_mod >= self.lease_ttl_ms:
-                for victim in (p, beats.get(name, (0, None))[1]):
-                    if victim is None:
-                        continue
-                    try:
-                        fs.delete(victim, False)
-                    except Exception:
-                        pass
-                continue
-            out.append((mod, name))
-        for name, (mod, p) in beats.items():
-            if name not in entrants and name != keep_token and now - mod >= self.lease_ttl_ms:
-                try:
-                    fs.delete(p, False)
-                except Exception:
-                    pass
-        return sorted(out)
-
-    def _start_heartbeat(self, fs, Path, batch_id: int, token: str):
-        """Spawn a daemon thread refreshing the holder's ``.hb`` sidecar
-        every TTL/4 (floored at 10 ms, capped at 30 s) until the
-        returned stop callable is invoked. py4j gives each Python thread
-        its own gateway connection and Hadoop ``FileSystem`` handles are
-        thread-safe, so beating concurrently with the staging write is
-        sound."""
-        stop = threading.Event()
-        period = min(max(self.lease_ttl_ms / 4000.0, 0.01), 30.0)
-
-        def beat() -> None:
-            while not stop.wait(period):
-                self._heartbeat_lease(fs, Path, batch_id, token)
-
-        th = threading.Thread(target=beat, daemon=True, name=f"lease-hb-{batch_id}")
-        th.start()
-
-        def stopper() -> None:
-            stop.set()
-            th.join(timeout=5.0)
-
-        return stopper
-
-    def _heartbeat_lease(self, fs, Path, batch_id: int, token: str) -> None:
-        """Refresh the holder's liveness WITHOUT touching its election
-        key: rewrite the ``<token>.hb`` sidecar (mtime := now). Best
-        effort — a failed beat degrades to the pre-heartbeat behavior,
-        where the fences still catch a takeover."""
-        try:
-            out = fs.create(self._entrant_path(Path, batch_id, token + ".hb"), True)
-            out.write(bytearray(b"1"))
-            out.close()
-        except Exception:
-            pass
-
-    def _acquire_lease(self, fs, Path, batch_id: int, marker=None) -> str | None:
-        """Per-batch mutual exclusion by lock-file ELECTION: each writer
-        creates its own UNIQUE entrant file (never overwriting anything),
-        waits a settle interval, then lists the lease dir — the entrant
-        with the smallest (mtime, token) wins. Unique names make the
-        protocol torn-write-free: the earlier write-token-then-read-back
-        scheme overwrote ONE shared file, and two racing buffered
-        creates (plus the local FS's sidecar .crc) could leave a state
-        matching NEITHER token, killing both writers. An election always
-        has a winner. Correctness needs settle > the FS's mtime
-        granularity (1 ms locally): any entrant arriving after the
-        winner's listing necessarily carries a later mtime and loses.
-
-        Losers (and arrivals finding a live foreign entrant) WAIT,
-        bounded by ``lease_ttl_ms``: if the winner commits, the marker
-        appears and we return ``None`` (caller no-ops — serialized
-        exactly-once); if it crashed, its entry ages out and the next
-        election round takes over (micro-batch replay after a hard
-        crash self-heals instead of crash-looping, ADVICE r7); a holder
-        that outlives the full TTL raises
-        :class:`ConcurrentWriterError`."""
-        d = self._lease_dir(Path, batch_id)
-        deadline = time.time() + self.lease_ttl_ms / 1000.0
-        token: str | None = None
-        while True:
-            if marker is not None and fs.exists(marker):
-                if token is not None:
-                    self._release_lease(fs, Path, batch_id, token)
-                return None  # holder committed; batch is done
-            if token is None:
-                token = uuid.uuid4().hex
-                try:
-                    out = fs.create(self._entrant_path(Path, batch_id, token), True)
-                    out.write(bytearray(b"1"))
-                    out.close()
-                except Exception:
-                    # transient store failure (or a racing delete of the
-                    # lease dir mid-create): re-enter, bounded by the
-                    # same deadline as any other contested wait. If the
-                    # failure hit AFTER the file landed (write/close),
-                    # the remnant would carry the oldest mtime and win
-                    # every election for a full TTL — sweep it before
-                    # abandoning the token (ADVICE r9 low, fixed r11).
-                    self._release_lease(fs, Path, batch_id, token)
-                    token = None
-                    if time.time() >= deadline:
-                        raise ConcurrentWriterError(
-                            f"batch {batch_id}: could not create a lease "
-                            f"entrant at {d} within {self.lease_ttl_ms} ms"
-                        )
-                    time.sleep(max(self.lease_settle_s, 0.005))
-                    continue
-                time.sleep(max(self.lease_settle_s, 0.005))
-                continue
+        token = uuid.uuid4().hex
+        staging = self._batch_staging_path(batch_id, token)
+        empty = df.isEmpty()
+        rows = 0
+        if not empty:
+            # commit-metrics observation: accumulator-backed, measured
+            # during the write itself — no second counting job (Delta's
+            # operationMetrics.numOutputRows parity)
+            obs = Observation()
+            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            writer = df.write.format(self.fmt).mode("overwrite")
+            if self.partition_cols:
+                writer = writer.partitionBy(*self.partition_cols)
             try:
-                ents = self._live_entrants(fs, d, keep_token=token)
+                writer.save(staging)
             except Exception:
-                ents = []  # racing deletes mid-listing: re-check
-            names = [t for _, t in ents]
-            if token not in names:
-                # our entry aged out or was cleaned: delete any remnant
-                # (a leaked earlier entrant would win elections as junk)
-                # and re-enter — unless the deadline already passed, in
-                # which case raise here rather than loop unboundedly
-                # (ADVICE r8: with short TTLs two live writers mutually
-                # aging each other's entrants could cycle
-                # create→age-out→recreate forever)
-                self._release_lease(fs, Path, batch_id, token)
-                token = None
-                if time.time() >= deadline:
-                    raise ConcurrentWriterError(
-                        f"batch {batch_id}: lease at {d} still contested "
-                        f"after waiting {self.lease_ttl_ms} ms"
-                    )
-                continue
-            if ents[0][1] == token:
-                # elected: remember the winning mtime so fences tolerate
-                # same-millisecond ties (ADVICE r8 — fence against
-                # entrants strictly OLDER than the settled election, not
-                # against current minimality)
-                self._won_mtime[token] = ents[0][0]
-                return token  # we hold the minimal (mtime, token): elected
-            if time.time() >= deadline:
-                self._release_lease(fs, Path, batch_id, token)
-                raise ConcurrentWriterError(
-                    f"batch {batch_id}: lease at {d} still held by another "
-                    f"writer after waiting {self.lease_ttl_ms} ms"
-                )
-            time.sleep(min(max(self.lease_settle_s, 0.02), 1.0))
-
-    def _check_lease(self, fs, Path, batch_id: int, token: str) -> None:
-        """Fence: our entrant must still be present and no live FOREIGN
-        entrant may sort below our settled election key ``(won_mtime,
-        token)``. Judging against the RECORDED win rather than current
-        minimality keeps the fence tie-tolerant in the safe direction
-        only: a foreign entrant in the same mtime tick with a HIGHER
-        token loses its own election (it sees us as minimal), so it may
-        pass; one with the same mtime but a LOWER token would WIN its
-        own election (ties break to the lower token) — tolerating it
-        meant two writers both held the lease whenever store mtime
-        granularity exceeds the settle interval (ADVICE r9 medium,
-        fixed r11: compare full (mtime, token) pairs, not mtime alone).
-        A genuine usurper deletes our entrant on takeover, so it is
-        still observed (token absent → raise). A listing that fails
-        mid-check is a lost fence."""
-        try:
-            ents = self._live_entrants(
-                fs, self._lease_dir(Path, batch_id), keep_token=token
-            )
-            won = self._won_mtime.get(token)
-            if won is None:
-                held = bool(ents) and ents[0][1] == token
-            else:
-                held = any(t == token for _, t in ents) and all(
-                    (m, tk) >= (won, token) for m, tk in ents if tk != token
-                )
-        except Exception:
-            held = False
-        if not held:
-            raise ConcurrentWriterError(
-                f"batch {batch_id}: writer lease lost to a concurrent writer"
-            )
-
-    def _release_lease(self, fs, Path, batch_id: int, token: str) -> None:
-        self._won_mtime.pop(token, None)
-        for name in (token, token + ".hb"):
-            try:
-                fs.delete(self._entrant_path(Path, batch_id, name), False)
-            except Exception:  # releasing is best-effort; TTL ages it out
-                pass
-
-    def _append_batch_locked(
-        self, df: DataFrame, batch_id: int, jvm, fs, Path, root, marker, token: str
-    ) -> bool:
-        prefix = f"b{batch_id}-"
-        if fs.exists(root):
-            it = fs.listFiles(root, True)  # recursive
-            while it.hasNext():
-                st = it.next()
-                p = st.getPath()
-                if p.getName().startswith(prefix):
-                    fs.delete(p, False)
-        if df.isEmpty():
-            self._write_marker(fs, marker, {"rows": 0})
-            return False
-        staging = posixpath.join(self.path, "_staging", f"batch={batch_id}")
-        # commit-metrics observation: accumulator-backed, measured during
-        # the write itself — no second counting job (Delta's
-        # operationMetrics.numOutputRows parity)
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = df.write.format(self.fmt).mode("overwrite")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.save(staging)
-        self._record_partition_schema(df)
-        # fence: never start publishing if another writer took the lease
-        # while we were staging
-        self._check_lease(fs, Path, batch_id, token)
-        staging_path = Path(staging)
-        staging_uri = staging_path.toUri().getPath()
-        published: set[str] = set()
-        it = fs.listFiles(staging_path, True)
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath()
-            name = p.getName()
-            if name.startswith("_") or name.startswith("."):
-                continue
-            rel = posixpath.relpath(p.toUri().getPath(), staging_uri)
-            target = Path(posixpath.join(self.path, posixpath.dirname(rel), prefix + name))
-            fs.mkdirs(target.getParent())
-            fs.rename(p, target)
-            published.add(target.toUri().getPath())
-        fs.delete(staging_path, True)
-        # defense-in-depth before the visibility point: sweep any
-        # b{batch}- files we did NOT just publish (a usurped writer's
-        # late-landing renames would otherwise ride under our marker as
-        # duplicate rows); published names embed per-writer task UUIDs,
-        # so foreign files are distinguishable from ours. Scoped to the
-        # leaf dirs we published into — a same-batch usurper replays the
-        # same rows, so its files land in the same partitions — keeping
-        # this O(our files), not a second full-table listing (the
-        # full-tree leftover case is already the step-2 cleanup's job).
-        for leaf in {posixpath.dirname(p) for p in published}:
-            for st in fs.listStatus(Path(leaf)):
-                p = st.getPath()
-                if p.getName().startswith(prefix) and p.toUri().getPath() not in published:
-                    fs.delete(p, False)
-        # fence: the commit marker is the visibility point — only the
-        # current lease holder may write it
-        self._check_lease(fs, Path, batch_id, token)
-        self._write_marker(fs, marker, {"rows": int(obs.get.get("rows", 0))})
-        return True
-
-    def _write_marker(self, fs, marker, metrics: dict) -> None:
-        """tmp+rename, NOT a plain create: marker EXISTENCE is the commit
-        bit, so a crash mid-write would otherwise leave a committed-
-        looking marker with torn metrics — and every metrics consumer
-        that treats unreadable as "empty batch" (the r14 fail-loud
-        sweep flipped those to fail-loud, but the write side must not
-        manufacture the case) would silently mis-handle a batch that
-        actually wrote rows (r14 review pass 4)."""
-        fs.mkdirs(marker.getParent())
-        tmp = marker.suffix(f".tmp-{uuid.uuid4().hex}")
+                # a same-batch writer that commits first deletes every
+                # other staging dir of the batch, possibly mid-write
+                if not fs.exists(marker):
+                    raise
+                fs.delete(Path(staging), True)
+                return False
+            self._record_partition_schema(df)
+            rows = int(obs.get.get("rows", 0))
+        tmp = marker.suffix(f".tmp-{token}")
         out = fs.create(tmp, True)
         try:
-            out.write(bytearray(json.dumps(metrics).encode("utf-8")))
+            out.write(bytearray(json.dumps({"rows": rows, "writer": token}).encode("utf-8")))
         finally:
             out.close()
-        fs.rename(tmp, marker)
+        if not _put_if_absent(fs, tmp, marker):
+            fs.delete(Path(staging), True)
+            return False
+        self._roll_forward(fs, Path, batch_id, token)
+        return not empty
+
+    def _batch_staging_path(self, batch_id: int, token: str) -> str:
+        return posixpath.join(self.path, "_staging", f"batch={batch_id}-{token}")
+
+    def _roll_forward(self, fs, Path, batch_id: int, writer: str | None) -> None:
+        """Publish committed batch ``batch_id``: rename the winning
+        ``writer``'s staged files into the table as
+        ``b{batch_id}-{writer}-<name>``, then delete every
+        ``_staging/batch={batch_id}-*`` dir. Idempotent, so replays,
+        ``recover()`` and concurrent callers converge: a rename whose
+        source is already gone was done by an earlier or concurrent
+        call.
+
+        Before the first rename into a leaf, any ``b{batch_id}-`` file
+        there WITHOUT the writer's token is deleted: it is not part of
+        the commit (e.g. a partial publish left by the pre-marker
+        protocol, or a file planted under a hand-removed marker) and
+        would otherwise turn live with it. The token keeps the winner's
+        own already-renamed files out of that sweep on a replay.
+
+        A marker without a writer (empty or unreadable) names no staging
+        dir, so nothing is published or deleted."""
+        if writer is None:
+            return
+        prefix = f"b{batch_id}-"
+        own = f"{prefix}{writer}-"
+        staging = Path(self._batch_staging_path(batch_id, writer))
+        staged = []
+        try:
+            it = fs.listFiles(staging, True)
+            while it.hasNext():
+                staged.append(it.next().getPath())
+        except Py4JJavaError:
+            if fs.exists(staging):
+                raise
+            staged = []  # a concurrent roll-forward finished and removed it
+        staging_uri = staging.toUri().getPath()
+        swept: set[str] = set()
+        for p in staged:
+            name = p.getName()
+            if name.startswith(("_", ".")):
+                continue
+            rel_dir = posixpath.dirname(posixpath.relpath(p.toUri().getPath(), staging_uri))
+            leaf = Path(posixpath.join(self.path, rel_dir))
+            if rel_dir not in swept:
+                swept.add(rel_dir)
+                fs.mkdirs(leaf)
+                for st in fs.listStatus(leaf):
+                    q = st.getPath().getName()
+                    if q.startswith(prefix) and not q.startswith(own):
+                        fs.delete(st.getPath(), False)
+            try:
+                fs.rename(p, Path(leaf, own + name))
+            except Py4JJavaError:
+                if fs.exists(p):
+                    raise
+        pattern = posixpath.join(self.path, "_staging", f"batch={batch_id}-*")
+        for st in fs.globStatus(Path(pattern)) or []:
+            fs.delete(st.getPath(), True)
 
     def batch_metrics(self) -> dict[int, dict]:
         """Commit metrics per batch id (rows written), read back from the
@@ -1191,22 +984,11 @@ class PartitionedTable:
         fs = commits.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if not fs.exists(commits):
             return {}
-        out: dict[int, dict] = {}
-        for st in fs.listStatus(commits):
-            p = st.getPath()
-            name = p.getName()
-            if not name.isdigit():
-                continue
-            try:
-                stream = fs.open(p)
-                try:
-                    data = bytes(stream.readAllBytes())
-                finally:
-                    stream.close()
-                out[int(name)] = json.loads(data.decode("utf-8")) if data else {}
-            except Exception:
-                out[int(name)] = {}
-        return out
+        return {
+            int(st.getPath().getName()): _read_json(fs, st.getPath())
+            for st in fs.listStatus(commits)
+            if st.getPath().getName().isdigit()
+        }
 
     # -- compaction ---------------------------------------------------------
 
@@ -1740,12 +1522,25 @@ class PartitionedTable:
 
     def recover(self) -> None:
         """Public entry for crash recovery — call before reads if a
-        compaction or partition overwrite may have been interrupted."""
+        compaction, partition overwrite or ``append_batch`` roll-forward
+        may have been interrupted. Staging dirs of committed batches are
+        rolled forward; uncommitted ones may belong to a live writer and
+        are left for ``vacuum()``."""
         jvm = self.spark._jvm
         Path = jvm.org.apache.hadoop.fs.Path
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         self._recover_compaction(fs, Path)
         self._recover_overwrite(fs, Path)
+        staging_root = Path(posixpath.join(self.path, "_staging"))
+        if not fs.exists(staging_root):
+            return
+        metrics = self.batch_metrics()
+        staged = {
+            st.getPath().getName().removeprefix("batch=").split("-")[0]
+            for st in fs.listStatus(staging_root)
+        }
+        for bid in sorted(int(b) for b in staged if b.isdigit() and int(b) in metrics):
+            self._roll_forward(fs, Path, bid, metrics[bid].get("writer"))
 
     # -- upsert (MERGE-equivalent) ------------------------------------------
 
@@ -2196,25 +1991,23 @@ class PartitionedTable:
 
         Reclaims, in order:
 
-        1. interrupted maintenance state: ``recover()`` first rolls any
-           half-finished compaction/overwrite swap forward or back, so
-           vacuum never races a swap window;
-        2. leftover ``_staging/`` trees — a writer that crashed between
-           staging and publish leaves its whole staged batch there; a
-           replay rebuilds staging from scratch (``mode("overwrite")``),
-           so anything present when vacuum runs is garbage;
-        3. orphaned data files: a published ``b{id}-`` file whose batch
-           has NO commit marker. ``append_batch`` deletes these when the
-           SAME batch replays, but a batch that never replays (stream
-           decommissioned, checkpoint deleted) would otherwise leak its
-           partial publish forever — and, worse, ``read()`` would count
-           its rows. Committed batches' files are never touched, so
-           ``read_as_of`` history is preserved.
+        1. interrupted state: ``recover()`` first rolls any half-finished
+           compaction/overwrite swap forward or back, so vacuum never
+           races a swap window, and rolls every committed batch's staged
+           files forward into the table — never deleting them;
+        2. the remaining ``_staging/`` trees — a writer that crashed or
+           lost before its commit marker leaves its staged batch there;
+           a replay stages afresh, so anything present now is garbage;
+        3. orphaned data files: a ``b{id}-`` file in the table whose
+           batch has NO commit marker. ``append_batch`` never publishes
+           before its commit, but a table written by an older publish-
+           then-mark version can hold such partial publishes, and
+           ``read()`` would count their rows. Committed batches' files
+           are never touched, so ``read_as_of`` history is preserved.
 
         Like Delta's VACUUM, the caller must not run it concurrently
         with an active writer on the same table (a writer mid-stage
-        would lose its staging dir and re-stage on replay — converging,
-        but wasted work)."""
+        would lose its staging dir and fail; its replay re-stages)."""
         jvm = self.spark._jvm
         Path = jvm.org.apache.hadoop.fs.Path
         root = Path(self.path)

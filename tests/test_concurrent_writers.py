@@ -8,12 +8,9 @@ delta-rs transactions (delta_io.py:112-116):
   per-batch markers — no shared mutable state);
 - same batch id, serialized writers: the second observes the commit
   marker and no-ops (returns False) — the foreachBatch replay contract;
-- same batch id, truly concurrent writers: exactly one publishes — a
-  writer that finds a live foreign lease waits (bounded by
-  lease_ttl_ms) and serializes to a no-op once the holder's marker
-  appears, takes over if the holder crashed, or raises
-  ConcurrentWriterError when racing into the lease write itself
-  (best-effort detection — see tableio.py's matrix).
+- same batch id, truly concurrent writers: exactly one wins the
+  put-if-absent commit marker and publishes; every other returns False
+  and its rows never become visible.
 """
 
 from __future__ import annotations
@@ -100,324 +97,91 @@ def test_same_batch_id_second_writer_noops(spark, tmp_path):
     assert {r["id"] for r in out.collect()} == {0, 1, 2, 3}
 
 
-def test_same_batch_id_truly_concurrent_one_fails_loudly(spark, tmp_path):
+def test_same_batch_id_truly_concurrent_one_commits(spark, tmp_path):
     """Two writers racing the SAME batch id: exactly one publishes, the
-    other raises ConcurrentWriterError before its data becomes visible —
-    the loud-failure row of the guarantee matrix. The surviving batch is
-    internally consistent (marker rows == visible rows)."""
-    import time
-
-    from incremental_dagster_delta_spark.tableio import ConcurrentWriterError
-
+    other returns False before its data becomes visible. The surviving
+    batch is internally consistent (marker rows == visible rows)."""
     path = str(tmp_path / "t4")
-    # generous settle widens the write→read-back race window so the two
-    # threads reliably overlap inside the lease protocol
-    a = PartitionedTable(spark, path, ["day"], lease_settle_s=0.3)
-    b = PartitionedTable(spark, path, ["day"], lease_settle_s=0.3)
+    a = PartitionedTable(spark, path, ["day"])
+    b = PartitionedTable(spark, path, ["day"])
     results: dict[str, object] = {}
 
     def run(name, table, n, base):
-        try:
-            results[name] = table.append_batch(_df(spark, "2024-01-05", n, base), 9)
-        except ConcurrentWriterError as e:
-            results[name] = e
+        results[name] = table.append_batch(_df(spark, "2024-01-05", n, base), 9)
 
-    ta = threading.Thread(target=run, args=("a", a, 5, 0))
-    tb = threading.Thread(target=run, args=("b", b, 6, 100))
-    ta.start()
-    tb.start()
-    ta.join()
-    tb.join()
-    errs = [k for k, v in results.items() if isinstance(v, ConcurrentWriterError)]
+    _run_threads([lambda: run("a", a, 5, 0), lambda: run("b", b, 6, 100)])
     oks = [k for k, v in results.items() if v is True]
-    # a fully-serialized schedule (no overlap) is a legal no-op for the
-    # second writer; the raced schedules must fail exactly one loudly
-    noops = [k for k, v in results.items() if v is False]
     assert len(oks) == 1, results
-    assert len(errs) + len(noops) == 1, results
+    assert [k for k, v in results.items() if v is False] == [
+        k for k in ("a", "b") if k not in oks
+    ], results
     out = a.read().where("day = '2024-01-05'")
     expected = 5 if oks == ["a"] else 6
     assert out.count() == expected
     assert out.select("id").distinct().count() == expected
     assert a.batch_metrics()[9]["rows"] == expected
-    # winner released its lease: no live entrant files remain
-    time.sleep(0.1)
-    lease_dir = tmp_path / "t4" / "_commits" / "9.lease.d"
-    assert not lease_dir.exists() or not any(lease_dir.iterdir())
-
-
-def test_stale_lease_is_taken_over(spark, tmp_path):
-    """A lease left by a crashed holder must not block replay: once its
-    age exceeds lease_ttl_ms the next writer takes over and commits."""
-    import time
-
-    path = str(tmp_path / "t5")
-    table = PartitionedTable(spark, path, ["day"], lease_ttl_ms=100, lease_settle_s=0.01)
-    entrants = tmp_path / "t5" / "_commits" / "3.lease.d"
-    entrants.mkdir(parents=True)
-    (entrants / "deadbeefcrashedholder").write_text("1")
-    time.sleep(0.15)
-    assert table.append_batch(_df(spark, "2024-01-06", 3, 0), 3) is True
-    assert table.read().count() == 3
-
-
-def test_live_foreign_lease_waits_then_takes_over(spark, tmp_path):
-    """A live foreign lease from a crashed holder (finally never ran, so
-    the lease was never released) must not crash-loop the replay: the
-    writer WAITS until the lease ages past lease_ttl_ms, then takes
-    over and commits — streaming restarts within the TTL self-heal
-    (ADVICE r7)."""
-    import time
-
-    path = str(tmp_path / "t6")
-    table = PartitionedTable(spark, path, ["day"], lease_ttl_ms=700, lease_settle_s=0.01)
-    entrants = tmp_path / "t6" / "_commits" / "4.lease.d"
-    entrants.mkdir(parents=True)
-    (entrants / "otherwritertoken").write_text("1")  # fresh: age ~0
-    t0 = time.time()
-    assert table.append_batch(_df(spark, "2024-01-07", 2, 0), 4) is True
-    waited = time.time() - t0
-    assert waited >= 0.5, f"should have waited out the live lease, waited {waited:.2f}s"
-    assert table.read().count() == 2
-
-
-def test_live_lease_with_marker_is_completed_batch(spark, tmp_path):
-    """A live foreign lease PLUS a present commit marker means the batch
-    already committed (the holder crashed between marker write and lease
-    release, or is about to release): the writer no-ops immediately
-    instead of waiting out the TTL or re-publishing (ADVICE r7)."""
-    import time
-
-    path = str(tmp_path / "t7")
-    first = PartitionedTable(spark, path, ["day"], lease_settle_s=0.01)
-    assert first.append_batch(_df(spark, "2024-01-08", 3, 0), 5) is True
-    # simulate the crashed-after-commit holder: marker exists, lease live
-    entrants = tmp_path / "t7" / "_commits" / "5.lease.d"
-    entrants.mkdir(parents=True, exist_ok=True)
-    (entrants / "crashedaftercommittoken").write_text("1")
-    second = PartitionedTable(spark, path, ["day"], lease_ttl_ms=60_000)
-    t0 = time.time()
-    assert second.append_batch(_df(spark, "2024-01-08", 3, 50), 5) is False
-    assert time.time() - t0 < 5.0, "marker+lease must short-circuit, not wait out TTL"
-    out = first.read()
-    assert out.count() == 3
-    assert {r["id"] for r in out.collect()} == {0, 1, 2}
-
-
-def _hadoop(spark, path: str):
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, Path
-
-
-def test_heartbeat_keeps_entrant_live_with_old_mtime(spark, tmp_path):
-    """Liveness is max(entrant, .hb sidecar) mtime while the election
-    ORDER key stays the entrant's immutable mtime: an old entrant with a
-    fresh heartbeat survives a foreign listing AND still sorts by its
-    original (oldest-wins) key; without the heartbeat it is aged out
-    (ADVICE r8 — a live-but-slow holder must never be usurped)."""
-    import os
-    import time
-
-    path = str(tmp_path / "hb1")
-    table = PartitionedTable(spark, path, ["day"], lease_ttl_ms=200)
-    d = tmp_path / "hb1" / "_commits" / "7.lease.d"
-    d.mkdir(parents=True)
-    old = time.time() - 10.0  # far past the TTL
-    (d / "aaaaholdertoken").write_text("1")
-    os.utime(d / "aaaaholdertoken", (old, old))
-    (d / "aaaaholdertoken.hb").write_text("1")  # fresh beat
-    (d / "zzzznewcomertoken").write_text("1")  # fresh foreign entrant
-    fs, Path = _hadoop(spark, path)
-    ents = table._live_entrants(fs, table._lease_dir(Path, 7))
-    names = [t for _, t in ents]
-    assert names == ["aaaaholdertoken", "zzzznewcomertoken"], ents
-    assert ents[0][0] == int(old * 1000), "order key must be the entrant mtime"
-    # same state minus the heartbeat: the stale entrant is swept
-    (d / "aaaaholdertoken.hb").unlink()
-    os.utime(d / "aaaaholdertoken", (old, old))
-    ents = table._live_entrants(fs, table._lease_dir(Path, 7))
-    assert [t for _, t in ents] == ["zzzznewcomertoken"], ents
-    assert not (d / "aaaaholdertoken").exists()
 
 
 def test_slow_live_holder_is_not_usurped(spark, tmp_path):
-    """An append that takes LONGER than lease_ttl_ms must not be usurped
-    while still live: the holder's heartbeat thread keeps it alive, so a
-    concurrent same-batch writer waits its full TTL and raises loudly
-    instead of electing itself mid-publish and doubling rows under the
-    marker (ADVICE r8, the medium finding)."""
+    """A same-batch writer arriving while the committed winner is still
+    slow in its roll-forward no-ops (returns False) after completing
+    the roll-forward itself; the winner then finds its files already
+    published and still returns True. Rows land exactly once."""
     import time
 
-    from incremental_dagster_delta_spark.tableio import ConcurrentWriterError
-
     path = str(tmp_path / "hb2")
-    slow = PartitionedTable(spark, path, ["day"], lease_ttl_ms=600, lease_settle_s=0.02)
-    fast = PartitionedTable(spark, path, ["day"], lease_ttl_ms=600, lease_settle_s=0.02)
+    slow = PartitionedTable(spark, path, ["day"])
+    fast = PartitionedTable(spark, path, ["day"])
+    committed = threading.Event()
+    orig = slow._roll_forward
 
-    orig = slow._record_partition_schema
+    def slow_roll_forward(fs, Path, batch_id, writer):  # runs after the commit
+        committed.set()
+        time.sleep(1.5)
+        return orig(fs, Path, batch_id, writer)
 
-    def slow_schema(df):  # runs inside _append_batch_locked, post-staging
-        time.sleep(1.5)  # > both writers' TTL
-        return orig(df)
-
-    slow._record_partition_schema = slow_schema
+    slow._roll_forward = slow_roll_forward
     results: dict[str, object] = {}
 
     def run_slow():
         results["slow"] = slow.append_batch(_df(spark, "2024-02-01", 4, 0), 11)
 
     def run_fast():
-        time.sleep(0.45)  # let the slow writer win the election first
-        try:
-            results["fast"] = fast.append_batch(_df(spark, "2024-02-01", 9, 100), 11)
-        except ConcurrentWriterError as e:
-            results["fast"] = e
+        assert committed.wait(120)
+        results["fast"] = fast.append_batch(_df(spark, "2024-02-01", 9, 100), 11)
 
     _run_threads([run_slow, run_fast])
-    assert results["slow"] is True, results
-    # the late writer either raised at its deadline (holder still live)
-    # or observed the committed marker and no-op'd — it must NOT publish
-    assert results["fast"] is not True, results
+    assert results == {"slow": True, "fast": False}, results
     out = slow.read().where("day = '2024-02-01'")
     assert out.count() == 4
     assert {r["id"] for r in out.collect()} == {0, 1, 2, 3}
     assert slow.batch_metrics()[11]["rows"] == 4
 
 
-def test_contested_election_raises_at_deadline_not_forever(spark, tmp_path):
-    """The token-absent re-entry branch must respect the deadline: a
-    writer whose entrants keep being deleted by a hostile peer raises
-    ConcurrentWriterError at ~lease_ttl_ms instead of cycling
-    create->age-out->recreate unboundedly (ADVICE r8, low #1)."""
-    import threading as th
-    import time
-
-    from incremental_dagster_delta_spark.tableio import ConcurrentWriterError
-
-    path = str(tmp_path / "hb3")
-    table = PartitionedTable(spark, path, ["day"], lease_ttl_ms=400, lease_settle_s=0.02)
-    d = tmp_path / "hb3" / "_commits" / "13.lease.d"
-    d.mkdir(parents=True)
-    stop = th.Event()
-
-    def hostile():
-        # keep a fresh foreign entrant present and delete everyone else's
-        while not stop.is_set():
-            (d / "aaaaforeign").write_text("1")
-            for f in d.iterdir():
-                # skip dotfiles: deleting Hadoop's in-flight .crc
-                # sidecars crashes the victim's fs.create outright,
-                # which would bypass the loop under test
-                if f.name != "aaaaforeign" and not f.name.startswith("."):
-                    try:
-                        f.unlink()
-                    except OSError:
-                        pass
-            time.sleep(0.01)
-
-    peer = th.Thread(target=hostile, daemon=True)
-    peer.start()
-    result: dict[str, object] = {}
-
-    def run():
-        t0 = time.time()
-        try:
-            table.append_batch(_df(spark, "2024-02-02", 2, 0), 13)
-            result["outcome"] = "published"
-        except ConcurrentWriterError:
-            result["outcome"] = "raised"
-        result["elapsed"] = time.time() - t0
-
-    w = th.Thread(target=run)
-    w.start()
-    w.join(timeout=10.0)
-    stop.set()
-    peer.join(timeout=2.0)
-    assert not w.is_alive(), "writer hung past the deadline (unbounded re-entry loop)"
-    assert result["outcome"] == "raised", result
-    assert result["elapsed"] < 5.0, result
-
-
-def test_fence_same_millisecond_tie_breaks_by_token(spark, tmp_path):
-    """_check_lease fences on the full (mtime, token) election key: a
-    foreign entrant in the same mtime tick with a HIGHER token loses
-    its own election (it sees the holder as minimal), so it passes the
-    fence — but one with a LOWER token would WIN its own election, so
-    it must dethrone the holder. The earlier mtime-only tolerance let
-    BOTH writers hold the lease whenever store mtime granularity
-    exceeds the settle interval (ADVICE r9 medium, fixed r11). A
-    strictly older entrant still fails the fence as before."""
-    import os
-
-    from incremental_dagster_delta_spark.tableio import ConcurrentWriterError
-
-    path = str(tmp_path / "hb4")
-    table = PartitionedTable(spark, path, ["day"], lease_ttl_ms=60_000, lease_settle_s=0.01)
-    fs, Path = _hadoop(spark, path)
-    token = table._acquire_lease(fs, Path, 17)
-    assert token is not None
-    d = tmp_path / "hb4" / "_commits" / "17.lease.d"
-    own_mtime_s = (d / token).stat().st_mtime
-    # tie, HIGHER token: that entrant's own election elects US -> safe,
-    # fence must NOT raise
-    (d / ("f" * 32)).write_text("1")
-    os.utime(d / ("f" * 32), (own_mtime_s, own_mtime_s))
-    table._check_lease(fs, Path, 17, token)  # must NOT raise
-    # tie, LOWER token: that entrant's own election elects ITSELF ->
-    # dual-holder unless the fence dethrones us
-    (d / ("0" * 32)).write_text("1")
-    os.utime(d / ("0" * 32), (own_mtime_s, own_mtime_s))
-    try:
-        table._check_lease(fs, Path, 17, token)
-        raised = False
-    except ConcurrentWriterError:
-        raised = True
-    assert raised, "same-mtime lower-token entrant must dethrone the holder"
-    os.remove(d / ("0" * 32))
-    # strictly older entrant: a genuinely earlier winner -> fence fails
-    older = own_mtime_s - 0.005
-    (d / ("1" * 32)).write_text("1")
-    os.utime(d / ("1" * 32), (older, older))
-    try:
-        table._check_lease(fs, Path, 17, token)
-        raised = False
-    except ConcurrentWriterError:
-        raised = True
-    assert raised, "strictly-older entrant must still fail the fence"
-    table._release_lease(fs, Path, 17, token)
-
-
 def test_four_concurrent_writers_same_batch_exactly_once(spark, tmp_path):
     """Four truly-concurrent same-batch writers: exactly one publishes,
-    the rest serialize to no-ops or loud failures, and the surviving
-    rows are internally consistent — the guarantee matrix's raced row
-    at higher contention than the pairwise tests (exercises election,
-    fences, heartbeats, and the contested re-entry path together)."""
-    from incremental_dagster_delta_spark.tableio import ConcurrentWriterError
-
+    the rest return False, and the surviving rows are internally
+    consistent — the guarantee matrix's raced row at higher contention
+    than the pairwise tests."""
     path = str(tmp_path / "t8")
-    tables = [
-        PartitionedTable(spark, path, ["day"], lease_settle_s=0.05, lease_ttl_ms=20_000)
-        for _ in range(4)
-    ]
+    tables = [PartitionedTable(spark, path, ["day"]) for _ in range(4)]
     results: dict[int, object] = {}
 
     def run(i):
-        try:
-            results[i] = tables[i].append_batch(
-                _df(spark, "2024-03-01", 3 + i, i * 100), 21
-            )
-        except ConcurrentWriterError as e:
-            results[i] = e
+        results[i] = tables[i].append_batch(
+            _df(spark, "2024-03-01", 3 + i, i * 100), 21
+        )
 
     _run_threads([lambda i=i: run(i) for i in range(4)])
     oks = [i for i, v in results.items() if v is True]
     assert len(oks) == 1, results
+    assert sorted(i for i, v in results.items() if v is False) == sorted(
+        set(range(4)) - set(oks)
+    ), results
     winner = oks[0]
     out = tables[0].read().where("day = '2024-03-01'")
     expected = 3 + winner
     assert out.count() == expected
     assert out.select("id").distinct().count() == expected
+    assert {r["id"] for r in out.collect()} == {winner * 100 + k for k in range(expected)}
     assert tables[0].batch_metrics()[21]["rows"] == expected
