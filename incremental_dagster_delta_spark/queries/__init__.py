@@ -43,26 +43,9 @@ from incremental_dagster_delta_spark.queries import quality_clf  # noqa: E402,F4
 from incremental_dagster_delta_spark.queries import kmeans  # noqa: E402,F401
 from incremental_dagster_delta_spark.queries import mmr  # noqa: E402,F401
 
-# --------------------------------------------------------------------------
-# Driver-visibility rotation. The driver's correctness sweep covers the
-# FIRST 50 registry entries each round, so ordering is a coverage budget:
-# every oracle-backed qid should earn a driver-verified row at least once
-# across rounds, and no row should age past ~6 rounds. After the r14
-# sweep the stalest rows were the 14 r8-aged re-confirms (VERDICT r14
-# #1), which lead the r15 front after the round's new operator; the 35
-# alphabetically-first of the 50 r10-aged rows fill to exactly 50
-# (27 after the session's six later additions took front slots).
-# The 23 r10 rows left for the r16 front: q_mmr_rerank, q_pq_train,
-# q_posexplode,
-# q_partition_discovery, q_partition_prune, q_pii_redact, q_quantiles,
-# q_range_join, q_regex_parse, q_repeated_ngrams,
-# q_reservoir_per_source, q_rolling_range_window, q_scd2_merge,
-# q_semdedup, q_seq_len_buckets, q_session_window, q_sliding_window,
-# q_stratified_sample, q_string_funcs, q_tumbling_window, q_unpivot,
-# q_upsert_merge, q_variant_json.
-# --------------------------------------------------------------------------
-_R15_FRONT = [
-    # (a) new this round — first driver rows
+# Driver front (first 50 entries): `python scripts/next_front.py --lead <its first 35 qids>`.
+# The first 24 lead unchanged: tests/test_oracle.py smoke-tests the first 24 registry entries.
+_FRONT = [
     "q_ivf_incremental",
     "q_rouge_n",
     "q_k_anonymity",
@@ -72,7 +55,6 @@ _R15_FRONT = [
     "q_cohen_kappa",
     "q_ccnet_buckets",
     "q_dp_noisy_counts",
-    # (b) the 14 r8-aged re-confirms (every row then ≤7 rounds old)
     "q_sql_udf",
     "q_substring_dedup",
     "q_surprisal_buckets",
@@ -87,34 +69,33 @@ _R15_FRONT = [
     "q_unigram_surprisal",
     "q_wholetext_ingest",
     "q_window_battery",
-    # (c) the 27 alphabetically-first r10-aged rows, filling to exactly 50
     "q_array_funcs",
-    "q_asof_join",
-    "q_audio_features",
-    "q_bloom_membership",
-    "q_bm25",
-    "q_boilerplate_lines",
-    "q_cms_heavy_hitters",
-    "q_cohort_retention",
-    "q_corpus_stats",
-    "q_cosine_ann_ivf_trained",
-    "q_daily_activity_outer",
-    "q_decontaminate",
-    "q_dedup_embedding",
-    "q_dedup_lines",
-    "q_drip_source",
-    "q_funnel_conversion",
-    "q_gap_fill",
-    "q_gopher_rules",
-    "q_histogram",
-    "q_incr_agg_maintain",
-    "q_incremental_dedup",
-    "q_json_extract",
-    "q_kmeans_centroids",
-    "q_kmeans_maximin",
-    "q_listing_accumulate",
-    "q_mixture_plan",
-    "q_pivot_api",
+    "q_triangle_count",
+    "q_triangle_doulion",
+    "q_deletion_vectors",
+    "q_change_data_feed",
+    "q_compaction_stats",
+    "q_ngram_jaccard",
+    "q_dedup_minhash",
+    "q_winnow_fingerprint",
+    "q_bpe_merges",
+    "q_bpe_encode",
+    "q_unigram_lm",
+    "q_mmr_rerank",
+    "q_partition_discovery",
+    "q_partition_prune",
+    "q_pii_redact",
+    "q_posexplode",
+    "q_pq_train",
+    "q_quantiles",
+    "q_range_join",
+    "q_regex_parse",
+    "q_repeated_ngrams",
+    "q_reservoir_per_source",
+    "q_rolling_range_window",
+    "q_scd2_merge",
+    "q_semdedup",
+    "q_seq_len_buckets",
 ]
 
 
@@ -228,6 +209,6 @@ def _rotate(front: list[str]) -> None:
     QUERIES.update(ordered)
 
 
-_rotate(_R15_FRONT)
+_rotate(_FRONT)
 
 __all__ = ["QUERIES", "QuerySpec", "query", "t"]

@@ -57,8 +57,50 @@ def ensure_session_defaults(spark: SparkSession) -> None:
                 pass  # conf removed on some versions — callers cope
 
 
+# Session confs that change what parquet schema inference returns for the
+# same file; each is part of the schema cache key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (qualified path, length, mtime ms, conf values) -> inferred StructType.
+_SCHEMAS: dict = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    status = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).getFileStatus(hpath)
+    key = (
+        status.getPath().toString(),
+        status.getLen(),
+        status.getModificationTime(),
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table.
+
+    The parquet schema is inferred once per process and then cached:
+    ``spark.read.parquet`` infers it by reading the file footer in a Spark
+    job on every call, so a cached schema read via ``.schema(...)`` fires
+    no job at all. This caches catalog metadata (what a Hive or Delta
+    catalog stores), never data. The key is the file's qualified path,
+    length and modification time from one Hadoop ``getFileStatus`` call,
+    so a file rewritten at the same path is re-inferred; plus the session
+    values of the confs that change inference (``nanosAsLong``,
+    ``binaryAsString``, ``int96AsTimestamp``, ``inferTimestampNTZ``), so a
+    session that flips one gets the types it asked for. A directory path
+    is keyed by the directory's own status, which a file rewritten in
+    place inside it does not change.
 
     ``events.parquet`` stores nanosecond timestamps (``timestamp[ns]``).
     Different Spark versions surface that column differently, so the
@@ -83,14 +125,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # render every stored-at-UTC-midnight date as the previous day).
     ensure_session_defaults(spark)
     if name == "events":
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         ts_dtype = dict(df.dtypes)["ts"]
         if ts_dtype == "bigint":
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if ts_dtype != "timestamp":
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _input_bytes(df: DataFrame) -> int | None:
@@ -106,8 +148,9 @@ def _input_bytes(df: DataFrame) -> int | None:
     # Zero input files (a localCheckpoint()ed intermediate, a
     # createDataFrame source) is an UNKNOWN size, not a known 0-byte
     # input (r15 review).
-    unsized = not df.inputFiles()
-    for p in df.inputFiles():
+    files = df.inputFiles()
+    unsized = not files
+    for p in files:
         parsed = urlparse(p)
         if parsed.scheme in ("", "file"):
             # urlparse handles both file:///x and single-slash file:/x URIs.
