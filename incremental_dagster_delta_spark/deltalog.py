@@ -69,7 +69,6 @@ from incremental_dagster_delta_spark.tableio import (
     HIVE_NULL_PARTITION,
     DeletionVectors,
     PartitionedTable,
-    _hidden_rel,
 )
 
 PROTOCOL_ACTION = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}

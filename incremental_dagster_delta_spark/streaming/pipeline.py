@@ -140,9 +140,10 @@ class IngestPipeline:
             return
         from incremental_dagster_delta_spark.deltalog import DeltaLogExporter
 
+        # no exists() gate: a table whose last visible file was removed
+        # still needs the remove-only version; one never written is a
+        # no-op (-1)
         for table in (self.processed, self.backwards, self.listing, self.quarantine):
-            if not table.exists():
-                continue
             ex = self._exporters.get(table.path)
             if ex is None:
                 ex = self._exporters[table.path] = DeltaLogExporter(table)
@@ -164,22 +165,22 @@ class IngestPipeline:
         partition) — the small-files failure mode SURVEY.md §7.7 flags at
         100 TB scale.
         """
-        if batch_df.isEmpty():
-            return
         raw = batch_df = batch_df.persist()
         try:
+            # the batch's days (driver-side distinct over a micro-batch —
+            # bounded) double as the emptiness probe, and the collect
+            # fills the cache the writes below read
+            days = sorted(r["day"] for r in batch_df.select("day").distinct().collect())
+            if not days:
+                return
             # exactly-once across the refresh/stream seam (r15 review):
             # refresh() consumes whatever source files exist, including
             # files the source checkpoint has not delivered yet — those
             # are already recorded in listing, and appending them again
             # here would double their rows. The anti-join is pruned to
-            # the batch's day partitions (driver-side distinct over a
-            # micro-batch — bounded), so at scale it reads only the
+            # the batch's day partitions, so at scale it reads only the
             # listing leaves this batch touches.
             if self.listing.exists():
-                days = sorted(
-                    r["day"] for r in batch_df.select("day").distinct().collect()
-                )
                 in_list = ", ".join(f"'{d}'" for d in days)
                 seen = self.listing.read(f"day IN ({in_list})").select(
                     "filename", "day"

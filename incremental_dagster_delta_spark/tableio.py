@@ -89,18 +89,33 @@ class CheckConstraintViolation(RuntimeError):
 HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _hidden_rel(root, p) -> bool:
-    """True when ``p`` sits under any ``_``/``.``-prefixed segment
-    relative to ``root`` — Spark's scan semantics. Such paths are
-    SIDECAR state (``_commits``, ``_staging``, the ``_dv`` deletion-
-    vector table, ``_dv_applied``, ``_constraints.json``, partition-
-    schema hints), never base-table data, so every recursive listing
-    that inventories data files by their ``b{id}-`` prefix must skip
-    them: a nested sidecar's batch ids are an INDEPENDENT sequence and
-    must never be checked against (or deleted under) the base table's
-    committed set (ADVICE r11: vacuum/restore/read_as_of/change_feed)."""
-    rel = posixpath.relpath(p.toUri().getPath(), root.toUri().getPath())
-    return any(seg.startswith(("_", ".")) for seg in rel.split("/"))
+def _visible_files(fs, root):
+    """Yield the Hadoop ``FileStatus`` of every file under ``root``,
+    never descending into or yielding a ``_``/``.``-prefixed entry —
+    Spark's scan semantics. Such entries are SIDECAR state
+    (``_commits``, ``_staging``, the ``_dv`` deletion-vector table,
+    ``_dv_applied``, ``_constraints.json``, partition-schema hints),
+    never base-table data, so every walk that inventories data files by
+    their ``b{id}-`` prefix uses this one: a nested sidecar's batch ids
+    are an INDEPENDENT sequence and must never be checked against (or
+    deleted under) the base table's committed set (ADVICE r11:
+    vacuum/restore/read_as_of/change_feed). Raises (Py4JJavaError)
+    when ``root`` does not exist.
+
+    Walks with ``listStatus``, not ``listFiles(root, True)``: without
+    Hadoop native IO, ``listFiles`` builds a ``LocatedFileStatus`` per
+    file, which on the local filesystem forks processes to load its
+    owner, group and permission, and it walks the hidden subtrees only
+    for the caller to drop them. On one 45-entry ``processed`` table
+    that was 184 forks and 347-510 ms; this walk forks none and takes
+    47-75 ms."""
+    for st in fs.listStatus(root):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        if st.isDirectory():
+            yield from _visible_files(fs, st.getPath())
+        else:
+            yield st
 
 
 def _salvage_hidden_root_entries(fs, Path, old_root: str, new_root: str) -> None:
@@ -166,11 +181,9 @@ def _salvage_unconsumed_data_files(
         return
     consumed_set = set(consumed)
     old_path = old.toUri().getPath()
-    it = fs.listFiles(old, True)
-    while it.hasNext():
-        p = it.next().getPath()
-        if _hidden_rel(old, p):
-            continue  # hidden entries ride _salvage_hidden_root_entries
+    # hidden entries ride _salvage_hidden_root_entries
+    for st in _visible_files(fs, old):
+        p = st.getPath()
         rel = posixpath.relpath(p.toUri().getPath(), old_path)
         if rel in consumed_set:
             continue  # rewritten into the new tree already
@@ -810,19 +823,7 @@ class PartitionedTable:
         Path = jvm.org.apache.hadoop.fs.Path
         p = Path(posixpath.join(self.path, "_partition_schema.json"))
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return {}
-        try:
-            stream = fs.open(p)
-            data = bytearray()
-            b = stream.read()
-            while b != -1:
-                data.append(b)
-                b = stream.read()
-            stream.close()
-            return json.loads(data.decode("utf-8"))
-        except Exception:
-            return {}
+        return _read_json(fs, p)
 
     def _restore_partition_types(self, df: DataFrame) -> DataFrame:
         from pyspark.sql.types import NullType
@@ -942,11 +943,8 @@ class PartitionedTable:
         prefix = f"b{batch_id}-"
         own = f"{prefix}{writer}-"
         staging = Path(self._batch_staging_path(batch_id, writer))
-        staged = []
         try:
-            it = fs.listFiles(staging, True)
-            while it.hasNext():
-                staged.append(it.next().getPath())
+            staged = [st.getPath() for st in _visible_files(fs, staging)]
         except Py4JJavaError:
             if fs.exists(staging):
                 raise
@@ -955,8 +953,6 @@ class PartitionedTable:
         swept: set[str] = set()
         for p in staged:
             name = p.getName()
-            if name.startswith(("_", ".")):
-                continue
             rel_dir = posixpath.dirname(posixpath.relpath(p.toUri().getPath(), staging_uri))
             leaf = Path(posixpath.join(self.path, rel_dir))
             if rel_dir not in swept:
@@ -1167,13 +1163,7 @@ class PartitionedTable:
         # .precompact) must still find the recorded watermark + fence
         fs.delete(Path(old), True)
         self._delete_compact_floor_token(fs, Path)
-        n = 0
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            p = it.next().getPath()
-            if not _hidden_rel(root, p):  # data files only, not sidecars
-                n += 1
-        return n
+        return sum(1 for _ in _visible_files(fs, root))  # data files, not sidecars
 
     def compact_partitions(
         self,
@@ -1666,13 +1656,8 @@ class PartitionedTable:
             # one silently changes even the at-floor read; r14 review
             # pass 3). Only a crashed writer's uncommitted b{id}- orphans
             # are not table state and exempt.
-            root_v = Path(posixpath.join(self.path, rel))
-            it = fs.listFiles(root_v, True)
-            while it.hasNext():
-                p = it.next().getPath()
-                if _hidden_rel(root_v, p):
-                    continue
-                name = p.getName()
+            for st in _visible_files(fs, Path(posixpath.join(self.path, rel))):
+                name = st.getPath().getName()
                 if name.startswith("b") and "-" in name:
                     bid = name[1 : name.index("-")]
                     if bid.isdigit():
@@ -1747,13 +1732,9 @@ class PartitionedTable:
         committed = set(self.committed_batches())
         root_path = root.toUri().getPath()
         out: list[tuple[str, object]] = []
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            st = it.next()
+        for st in _visible_files(fs, root):
             p = st.getPath()
             name = p.getName()
-            if _hidden_rel(root, p):
-                continue
             if name.startswith("b") and "-" in name:
                 bid = name[1 : name.index("-")]
                 if bid.isdigit() and int(bid) not in committed:
@@ -1870,12 +1851,9 @@ class PartitionedTable:
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         files = []
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            p = it.next().getPath()
+        for st in _visible_files(fs, root):  # never load sidecar (_dv) files
+            p = st.getPath()
             name = p.getName()
-            if _hidden_rel(root, p):  # never load sidecar (_dv) files
-                continue
             if name.startswith("b") and "-" in name and name[1 : name.index("-")].isdigit():
                 if int(name[1 : name.index("-")]) in wanted:
                     files.append(p.toString())
@@ -1948,15 +1926,12 @@ class PartitionedTable:
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         # inventory: which victim batches still have their prefixed files?
         victim_files: dict[int, list] = {b: [] for b in victims}
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            pth = it.next().getPath()
+        # a _dv sidecar file whose batch id collides with a victim id
+        # must neither be deleted nor mask the collapsed-history
+        # refusal — sidecar ids are an independent sequence
+        for st in _visible_files(fs, root):
+            pth = st.getPath()
             name = pth.getName()
-            # a _dv sidecar file whose batch id collides with a victim id
-            # must neither be deleted nor mask the collapsed-history
-            # refusal — sidecar ids are an independent sequence
-            if _hidden_rel(root, pth):
-                continue
             if name.startswith("b") and "-" in name:
                 bid = name[1 : name.index("-")]
                 if bid.isdigit() and int(bid) in victims:
@@ -2031,17 +2006,14 @@ class PartitionedTable:
                     deleted += 1
                 fs.delete(st.getPath(), True)
         committed = set(self.committed_batches())
-        it = fs.listFiles(root, True)
         orphans = []
-        while it.hasNext():
-            p = it.next().getPath()
+        # skip anything under a hidden segment — a nested sidecar's
+        # (e.g. _dv's) committed files carry batch ids from an
+        # INDEPENDENT sequence and must never be judged orphans
+        # against the base table's committed set (ADVICE r11)
+        for st in _visible_files(fs, root):
+            p = st.getPath()
             name = p.getName()
-            # skip anything under a hidden segment — a nested sidecar's
-            # (e.g. _dv's) committed files carry batch ids from an
-            # INDEPENDENT sequence and must never be judged orphans
-            # against the base table's committed set (ADVICE r11)
-            if _hidden_rel(root, p):
-                continue
             if name.startswith("b") and "-" in name:
                 bid = name[1 : name.index("-")]
                 if bid.isdigit() and int(bid) not in committed:
@@ -2071,11 +2043,18 @@ class PartitionedTable:
         return df
 
     def exists(self) -> bool:
+        """True when the table tree holds at least one visible file: the
+        walk of :func:`_visible_files` yields one. Stops at the first
+        file and runs no Spark job; a missing root, or one holding only
+        hidden sidecar state (``_commits``, ``_delta_log``,
+        ``_staging``), does not exist."""
+        jvm = self.spark._jvm
+        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         try:
-            self.spark.read.format(self.fmt).load(self.path).schema
-            return True
-        except Exception:
-            return False
+            return next(_visible_files(fs, root), None) is not None
+        except Py4JJavaError:
+            return False  # no root (or a compaction swap moved it mid-walk)
 
 
 class DeletionVectors:
@@ -2403,12 +2382,9 @@ def change_feed(
     # inserts: the b{id}- files of each base version in the window
     files_by_version: dict[int, list[str]] = {b: [] for b in base_versions}
     if fs.exists(root):
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            p = it.next().getPath()
+        for st in _visible_files(fs, root):  # _dv files are delete, not insert, state
+            p = st.getPath()
             name = p.getName()
-            if _hidden_rel(root, p):  # _dv files are delete, not insert, state
-                continue
             if name.startswith("b") and "-" in name:
                 bid = name[1 : name.index("-")]
                 if bid.isdigit() and int(bid) in files_by_version:
