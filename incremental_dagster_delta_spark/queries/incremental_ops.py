@@ -797,8 +797,10 @@ def q_compaction_stats(spark, sf_dir):
     collapsed 4→1 per day and (b) not a row was lost. At 100 TB this is
     the scheduled maintenance job that keeps scan task counts sane;
     ``tableio.compact`` rewrites each leaf in parallel (repartition on
-    the partition columns + deterministic salt) and swaps atomically,
-    with crash recovery pinned in tests/test_compaction_crash.py."""
+    the partition columns + deterministic salt) and commits the rewrite
+    through the same intent marker and per-leaf swap as a partition
+    overwrite, with crash recovery pinned in
+    tests/test_compaction_crash.py."""
     import glob
 
     from incremental_dagster_delta_spark.tableio import PartitionedTable

@@ -44,14 +44,17 @@ commit:
   is the one window the protocol leaves open; a real Delta log closes
   it by making the log entry itself the file list.
 - **append racing a MAINTENANCE rewrite (compact / purge / overwrite)**:
-  best-effort salvage, not a full guarantee. Row-preserving rewrites and
-  purge record the file names they READ (the ``consumed`` fence); at
-  completion, any other data file found in the swapped-out tree whose
-  batch is committed is salvaged back into the live tree, and the
-  committed set is RE-READ immediately before the shadow is deleted so a
-  marker landing mid-salvage is caught (r14 ADVICE #4). Drop plans
-  raised by purge fence on the consumed list too, so a racer's files
-  never match the fence. The residual window is true concurrency at the
+  best-effort salvage, not a full guarantee. Every maintenance rewrite
+  commits through the one overwrite intent marker
+  (:meth:`PartitionedTable.overwrite_partitions`); row-preserving
+  rewrites and purge record the file names they READ (the ``consumed``
+  fence) in it. At completion, any other data file found in a
+  swapped-out leaf whose batch is committed is salvaged back into the
+  live leaf, and the committed set is RE-READ immediately before the
+  shadow is deleted so a marker landing mid-salvage is caught (r14
+  ADVICE #4). Drop plans raised by compact/purge fence on the consumed
+  list too, so a racer's files never match the fence. The residual
+  window is true concurrency at the
   filesystem level: a publish whose files land in the old tree after the
   final committed-set re-read and before the shadow deletion (or whose
   rename is literally in flight during the swap) can still lose files.
@@ -123,15 +126,16 @@ def _salvage_hidden_root_entries(fs, Path, old_root: str, new_root: str) -> None
     ``new_root`` during a whole-root swap: commit markers, the ``_dv``
     sidecar, its ``_dv_applied`` watermark, ``_constraints.json``,
     partition-schema hints. Salvaging only ``_commits`` (the pre-r12
-    behavior) silently destroyed the other sidecars on compact()/
-    whole-table overwrite — CHECK constraints dropped and soft-deleted
-    rows resurrected (ADVICE r11). Directories MERGE recursively
-    (children move when absent at the destination): a writer that
-    recreated e.g. ``_commits`` in the promoted root between a
-    crash-point-3 swap and its recovery (append_batch does not run
-    compaction recovery) must not block the old markers from moving —
-    top-level skip-if-exists stranded them in ``.precompact`` and the
-    committed batches' files then read as vacuum-able orphans (r14).
+    behavior) silently destroyed the other sidecars on an unpartitioned
+    compact()/purge()/overwrite — CHECK constraints dropped and
+    soft-deleted rows resurrected (ADVICE r11). Directories MERGE
+    recursively (children move when absent at the destination): a
+    writer that recreated e.g. ``_commits`` in the promoted root between
+    the swap and its marker roll-forward (append_batch does not run
+    overwrite recovery) must not block the old markers from moving —
+    top-level skip-if-exists stranded them in the ``.preoverwrite``
+    shadow and the committed batches' files then read as vacuum-able
+    orphans (r14).
     Same-path FILES keep the destination (the newer state). Idempotent:
     each leaf entry moves at most once, so any crash point replays
     safely."""
@@ -158,7 +162,7 @@ def _salvage_hidden_root_entries(fs, Path, old_root: str, new_root: str) -> None
 
 
 def _salvage_unconsumed_data_files(
-    fs, Path, old_root: str, new_root: str, consumed: list[str] | None, committed: set
+    fs, Path, old_root: str, new_root: str, consumed: list[str], committed: set
 ) -> None:
     """Move every TABLE-STATE data file under ``old_root`` that the
     rewrite did NOT consume (root-relative path absent from
@@ -171,11 +175,8 @@ def _salvage_unconsumed_data_files(
     (unversioned-append) files. NOT salvaged: uncommitted b{id}-
     partials — a crashed writer's replay republishes them in full, and
     preserving them would leak their rows into reads (the pinned
-    partials-cleanup behavior). ``consumed=None`` (legacy marker/token)
-    keeps the old wholesale-delete behavior. Idempotent:
-    rename-if-absent per file, so crash replay converges."""
-    if consumed is None:
-        return
+    partials-cleanup behavior). Idempotent: rename-if-absent per
+    file, so crash replay converges."""
     old = Path(old_root)
     if not fs.exists(old):
         return
@@ -351,10 +352,13 @@ class PartitionedTable:
         refresh left a half-written partition, the one Delta semantic the
         parquet mapping didn't reproduce).
 
-        Protocol (same commit-marker discipline as ``compact()``):
+        Protocol (``compact()`` and ``DeletionVectors.purge()`` commit
+        through it too):
 
         1. write ``df`` partitioned into a sibling staging dir — the live
-           table is untouched while the expensive work runs;
+           table is untouched while the expensive work runs; the row
+           count observed during that write decides emptiness (an
+           ``isEmpty()`` probe would run ``df``'s plan twice);
         2. enumerate staged leaf partitions; with ``**scope`` given
            (e.g. ``day="2024-03-26"``), also enumerate existing leaves
            matching the scope but absent from the staged set — those are
@@ -387,7 +391,7 @@ class PartitionedTable:
         driver jobs).
 
         ``_row_preserving`` (internal): row-preserving rewrites
-        (``compact_partitions``) advance the history floor with
+        (``compact``, ``compact_partitions``) advance the history floor with
         ``exact=True`` — the at-floor snapshot remains exactly the state
         after the floor batch committed. Row-CHANGING rewrites (refresh,
         ``purge``) collapse their changes INTO the floor batch, so the
@@ -396,11 +400,8 @@ class PartitionedTable:
         AT the floor too (ADVICE r13). The flag travels in the intent
         marker so crash replay advances the floor identically.
         """
-        empty = df.isEmpty()
-        if empty and not scope and _replace_leaves is None:
-            return False  # empty-commit guard (reference delta_io.py:85-86)
-        if not empty and _validate:
-            # internal REWRITES (purge/compact_partitions) pass
+        if _validate:
+            # internal REWRITES (compact/purge/compact_partitions) pass
             # _validate=False: their rows already passed the CHECK gate
             # at first write, and re-validating adds a full aggregation
             # scan per rewritten leaf (Delta OPTIMIZE does not
@@ -414,12 +415,21 @@ class PartitionedTable:
         staging = self._overwrite_staging_path()
         if fs.exists(Path(staging)):
             fs.delete(Path(staging), True)
-        staged: list[str] = []
-        if not empty:
-            writer = df.write.format(self.fmt).mode("overwrite")
-            if self.partition_cols:
-                writer = writer.partitionBy(*self.partition_cols)
-            writer.save(staging)
+        obs = Observation()
+        writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write
+        writer = writer.format(self.fmt).mode("overwrite")
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        writer.save(staging)
+        empty = int(obs.get.get("rows", 0)) == 0
+        if empty:
+            # a flat empty write still leaves a schema-only parquet file:
+            # swapping it in would replace the table with nothing. With no
+            # scope or _replace_leaves the plan stays empty below — the
+            # empty-commit guard (reference delta_io.py:85-86).
+            fs.delete(Path(staging), True)
+            staged: list[str] = []
+        else:
             staged = self._list_leaf_dirs(fs, Path, staging)
         plan = []
         for leaf in staged:
@@ -431,8 +441,12 @@ class PartitionedTable:
                 # deleting it with the shadow (r14 review pass 4)
                 entry["consumed"] = list(_consumed[leaf])
             plan.append(entry)
-        if scope and self.partition_cols and fs.exists(Path(self.path)):
-            staged_set = set(staged)
+        if self.partition_cols and (scope or _replace_leaves) and fs.exists(Path(self.path)):
+            # existing leaves absent from the staged set are DROPPED in the
+            # same transaction when they match the scope (full
+            # replaceWhere) or are listed in _replace_leaves (all their
+            # rows rewrote away)
+            staged_set, replace = set(staged), set(_replace_leaves or ())
             for leaf in self._list_leaf_dirs(fs, Path, self.path):
                 if leaf in staged_set:
                     continue
@@ -448,44 +462,28 @@ class PartitionedTable:
                         if "=" in seg  # tolerate stray non-hive dirs
                     )
                 }
-                if parts and all(parts.get(k) == str(v) for k, v in scope.items()):
-                    if _consumed is not None and leaf in _consumed:
-                        # FENCE the drop with the files the rewrite
-                        # actually READ (r14 ADVICE): a plan-time
-                        # directory listing would also fence a racer
-                        # batch that committed into the leaf between the
-                        # rewrite's live-file read and this listStatus,
-                        # deleting its rows permanently with no salvage —
-                        # the exact race the swap path's consumed set
-                        # closes. Files outside the consumed set survive
-                        # the drop.
-                        names = list(_consumed[leaf])
-                    else:
-                        # FENCE the drop with the exact file names present
-                        # now: a marker surviving past completion (crash
-                        # before its deletion) must not re-drop data a
-                        # later append committed into a recreated leaf
-                        leaf_path = Path(posixpath.join(self.path, leaf))
-                        names = [
-                            st.getPath().getName() for st in fs.listStatus(leaf_path)
-                        ]
-                    plan.append({"leaf": leaf, "action": "drop", "files": names})
-        if _replace_leaves is not None and self.partition_cols and fs.exists(Path(self.path)):
-            # listed leaves whose rows ALL rewrote away: drop in the same
-            # transaction, with the same consumed-set fencing as the
-            # scope path above (racer batches survive the drop).
-            staged_set = set(staged)
-            existing = set(self._list_leaf_dirs(fs, Path, self.path))
-            for leaf in _replace_leaves:
-                if leaf in staged_set or leaf not in existing:
+                in_scope = bool(scope and parts) and all(
+                    parts.get(k) == str(v) for k, v in scope.items()
+                )
+                if not (in_scope or leaf in replace):
                     continue
                 if _consumed is not None and leaf in _consumed:
+                    # FENCE the drop with the files the rewrite actually
+                    # READ (r14 ADVICE): a plan-time directory listing
+                    # would also fence a racer batch that committed into
+                    # the leaf between the rewrite's live-file read and
+                    # this listStatus, deleting its rows permanently with
+                    # no salvage — the exact race the swap path's consumed
+                    # set closes. Files outside the consumed set survive
+                    # the drop.
                     names = list(_consumed[leaf])
                 else:
+                    # FENCE the drop with the exact file names present
+                    # now: a marker surviving past completion (crash
+                    # before its deletion) must not re-drop data a later
+                    # append committed into a recreated leaf
                     leaf_path = Path(posixpath.join(self.path, leaf))
-                    names = [
-                        st.getPath().getName() for st in fs.listStatus(leaf_path)
-                    ]
+                    names = [st.getPath().getName() for st in fs.listStatus(leaf_path)]
                 plan.append({"leaf": leaf, "action": "drop", "files": names})
         if not plan:
             return False
@@ -583,13 +581,8 @@ class PartitionedTable:
         marker = Path(self._overwrite_marker_path())
         if not fs.exists(marker):
             return
-        stream = fs.open(marker)
-        try:
-            raw = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        marker_doc = json.loads(raw.decode("utf-8"))
-        plan = marker_doc["leaves"]
+        marker_doc = _read_json(fs, marker)
+        plan = marker_doc["leaves"]  # written tmp+rename, so never torn
         # legacy markers (no flag) are treated as row-changing — the
         # conservative reading: refusing an exact-at-floor snapshot is
         # loud, serving a wrong one is not
@@ -825,6 +818,16 @@ class PartitionedTable:
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return _read_json(fs, p)
 
+    def _read_files(self, files: list[str]) -> DataFrame:
+        """The rows of exactly ``files`` (paths under the table root),
+        partition columns parsed from their leaf paths as strings and cast
+        back to the recorded types — the load behind every maintenance
+        rewrite and time-travel read."""
+        with _string_partitions(self.spark):
+            return self._restore_partition_types(
+                self.spark.read.format(self.fmt).option("basePath", self.path).load(files)
+            )
+
     def _restore_partition_types(self, df: DataFrame) -> DataFrame:
         from pyspark.sql.types import NullType
 
@@ -883,28 +886,31 @@ class PartitionedTable:
         self._validate_constraints(df)
         token = uuid.uuid4().hex
         staging = self._batch_staging_path(batch_id, token)
-        empty = df.isEmpty()
-        rows = 0
-        if not empty:
-            # commit-metrics observation: accumulator-backed, measured
-            # during the write itself — no second counting job (Delta's
-            # operationMetrics.numOutputRows parity)
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            writer = df.write.format(self.fmt).mode("overwrite")
-            if self.partition_cols:
-                writer = writer.partitionBy(*self.partition_cols)
-            try:
-                writer.save(staging)
-            except Exception:
-                # a same-batch writer that commits first deletes every
-                # other staging dir of the batch, possibly mid-write
-                if not fs.exists(marker):
-                    raise
-                fs.delete(Path(staging), True)
-                return False
+        # commit-metrics observation: accumulator-backed, measured during
+        # the write itself — no second counting job (Delta's
+        # operationMetrics.numOutputRows parity), and the emptiness test
+        # (no isEmpty() probe running the plan twice)
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        writer = df.write.format(self.fmt).mode("overwrite")
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        try:
+            writer.save(staging)
+        except Exception:
+            # a same-batch writer that commits first deletes every
+            # other staging dir of the batch, possibly mid-write
+            if not fs.exists(marker):
+                raise
+            fs.delete(Path(staging), True)
+            return False
+        rows = int(obs.get.get("rows", 0))
+        if rows:
             self._record_partition_schema(df)
-            rows = int(obs.get.get("rows", 0))
+        else:
+            # a flat empty write still leaves a schema-only parquet file,
+            # which must not roll into the table under the 0-row commit
+            fs.delete(Path(staging), True)
         tmp = marker.suffix(f".tmp-{token}")
         out = fs.create(tmp, True)
         try:
@@ -915,7 +921,7 @@ class PartitionedTable:
             fs.delete(Path(staging), True)
             return False
         self._roll_forward(fs, Path, batch_id, token)
-        return not empty
+        return rows > 0
 
     def _batch_staging_path(self, batch_id: int, token: str) -> str:
         return posixpath.join(self.path, "_staging", f"batch={batch_id}-{token}")
@@ -998,16 +1004,23 @@ class PartitionedTable:
         files — the OPTIMIZE/bin-packing pass for the small-files pressure
         the one-record-per-file ingest pattern creates (SURVEY.md §7.7).
 
-        Implementation: read the whole table, repartition so each leaf's
-        rows land in exactly ``target_files_per_partition`` tasks (partition
-        columns plus a deterministic row-hash salt when >1 — a bare
-        ``repartition(*cols)`` would always emit ONE file per leaf), rewrite
-        into a staging dir, then swap staging into place. Returns the number
-        of data files after compaction. On a Delta deployment this maps to
-        ``OPTIMIZE`` and is transactional; here the swap window is the two
-        renames — ``_recover_compaction`` rolls an interrupted swap back or
-        forward, and a crash test pins every window (tests/test_compaction_
-        crash.py).
+        Implementation: read the table's live files, repartition so each
+        leaf's rows land in exactly ``target_files_per_partition`` tasks
+        (partition columns plus a deterministic row-hash salt when >1 — a
+        bare ``repartition(*cols)`` would always emit ONE file per leaf),
+        and commit the rewrite as ONE :meth:`overwrite_partitions`
+        transaction over every live leaf — the intent marker, per-leaf
+        swap and roll-forward recovery a refresh and
+        ``DeletionVectors.purge`` use. An unpartitioned table is the single
+        leaf ``""``: its whole root swaps and every hidden root entry
+        (``_commits``, ``_dv``, ``_constraints.json``, …) carries over.
+        The marker records the plan-time history floor (advanced exact:
+        the rewrite preserves rows, so the at-floor snapshot stays
+        readable) and the file names the rewrite read, so a batch
+        committing during the rewrite is salvaged rather than deleted.
+        Returns the number of data files after compaction. On a Delta
+        deployment this maps to ``OPTIMIZE``; tests/test_compaction_crash.py
+        pins the crash windows.
 
         ``cluster_by`` rewrites with files RANGE-CLUSTERED on those
         columns (Delta's ``OPTIMIZE ... ZORDER BY`` / clustered-table
@@ -1037,29 +1050,21 @@ class PartitionedTable:
         Path = jvm.org.apache.hadoop.fs.Path
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        self._recover_compaction(fs, Path)
         # a pending overwrite marker means a leaf is mid-swap (possibly
         # renamed OUT of the table): compacting that state would publish
         # a table with the leaf missing
         self._recover_overwrite(fs, Path)
-        if not fs.exists(root):
-            return 0
         # rewrite LIVE files only: reading the raw dir would bake a
         # crashed writer's uncommitted b{id}- partials into unprefixed
         # files, so the batch's replay would duplicate its rows and
         # vacuum could never reclaim them. The swap still removes the
-        # partials from disk — safe, the replay re-publishes in full.
+        # partials from each rewritten leaf — safe, the replay
+        # re-publishes in full.
         live_map = self._live_data_files()
         live = [f for fl in live_map.values() for f in fl]
         if not live:
             return 0  # nothing committed to rewrite
-        with _string_partitions(self.spark):
-            df = self._restore_partition_types(
-                self.spark.read.format(self.fmt)
-                .option("basePath", self.path)
-                .load(live)
-            )
-        staging = self.path.rstrip("/") + ".compacting"
+        df = self._read_files(live)
         n_files = max(1, int(target_files_per_partition))
         drop_cols: list[str] = []
         if zorder:
@@ -1102,67 +1107,23 @@ class PartitionedTable:
             writer = df.repartition(*[F.col(c) for c in self.partition_cols], salt)
         else:
             writer = df.coalesce(n_files)
-        w = writer.write.format(self.fmt).mode("overwrite")
-        if self.partition_cols:
-            w = w.partitionBy(*self.partition_cols)
-        w.save(staging)
-        old = self.path.rstrip("/") + ".precompact"
-        # floor token BEFORE the swap becomes visible: crash-point-3
-        # recovery advances the floor to the watermark this rewrite
-        # actually collapsed, not to max(committed) at recovery time
-        # (appends landing between crash and recovery keep their prefixes)
-        committed_now = self.committed_batches()
-        _sidecar_replace(
-            fs,
-            Path,
-            self._compact_floor_token_path(),
-            {
-                "floor": max(committed_now) if committed_now else -1,
-                # consumed fence: exactly the live files this rewrite
-                # read. A batch that COMMITS during the staging write
-                # lands its b{id}- files in the old root; deleting
-                # .precompact wholesale would destroy them while the
-                # salvage preserves their marker — permanent row loss
-                # under a row-preserving operation (r14 review pass 4).
-                # Completion/recovery salvages every non-consumed data
-                # file back into the new root instead.
-                "consumed": sorted(
-                    posixpath.join(leaf, f.rsplit("/", 1)[-1]) if leaf else f.rsplit("/", 1)[-1]
-                    for leaf, fl in live_map.items()
-                    for f in fl
-                ),
+        self.overwrite_partitions(
+            writer,
+            _validate=False,
+            _row_preserving=True,
+            # consumed fence: exactly the live files this rewrite read. A
+            # batch that COMMITS during the staging write lands its b{id}-
+            # files in the old leaf; completion salvages them into the new
+            # one instead of deleting them with the shadow (r14 review
+            # pass 4)
+            _consumed={
+                leaf: [f.rsplit("/", 1)[-1] for f in fl] for leaf, fl in live_map.items()
             },
+            # every live leaf is replaced: one whose rows are rewritten
+            # under another directory name (``n=03`` read back as int 3
+            # lands in ``n=3``) is dropped, fenced by its consumed files
+            _replace_leaves=sorted(live_map) if self.partition_cols else None,
         )
-        fs.rename(root, Path(old))
-        fs.rename(Path(staging), root)
-        # keep ALL hidden root entries: _commits (a checkpoint replay
-        # would re-publish applied batches without them), _dv +
-        # _dv_applied (the rewrite reads the RAW base, which still
-        # contains soft-deleted rows — dropping the sidecar would
-        # resurrect them), _constraints.json, partition-schema hints.
-        _salvage_hidden_root_entries(fs, Path, old, self.path)
-        self._record_partition_schema(df)
-        # floor BEFORE deleting .precompact: the shadow dir is the replay
-        # token for crash-point-3 recovery, so the floor advance (exact —
-        # compaction preserves rows) replays with the roll-forward instead
-        # of being lost to a crash in this window (ADVICE r13)
-        token_doc = self._read_compact_floor_token_doc(fs, Path)
-        self._advance_history_floor(
-            exact=True,
-            floor_value=token_doc.get("floor") if token_doc else None,
-        )
-        _salvage_unconsumed_data_files(
-            fs,
-            Path,
-            old,
-            self.path,
-            token_doc.get("consumed") if token_doc else None,
-            set(self.committed_batches()),
-        )
-        # token outlives .precompact: crash-point-3 recovery (keyed on
-        # .precompact) must still find the recorded watermark + fence
-        fs.delete(Path(old), True)
-        self._delete_compact_floor_token(fs, Path)
         return sum(1 for _ in _visible_files(fs, root))  # data files, not sidecars
 
     def compact_partitions(
@@ -1193,13 +1154,12 @@ class PartitionedTable:
             raise ValueError("zorder=True needs cluster_by with at least two columns")
         n_files = max(1, int(target_files_per_partition))
         # converge any interrupted maintenance BEFORE trusting the file
-        # index: a half-swapped compact() or a pending overwrite plan
-        # would otherwise yield wrong counts (or replay mid-rewrite,
-        # after a leaf load already captured its file list)
+        # index: a pending overwrite plan would otherwise yield wrong
+        # counts (or replay mid-rewrite, after a leaf load already
+        # captured its file list)
         jvm = self.spark._jvm
         Path = jvm.org.apache.hadoop.fs.Path
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        self._recover_compaction(fs, Path)
         self._recover_overwrite(fs, Path)
         rewritten = 0
         live = self._live_data_files()
@@ -1211,12 +1171,7 @@ class PartitionedTable:
             # columns) — a directory load would both rebuild the whole
             # table's file index per offender AND bake any uncommitted
             # partial publish into the rewrite (see _live_data_files)
-            with _string_partitions(self.spark):
-                df = self._restore_partition_types(
-                    self.spark.read.format(self.fmt)
-                    .option("basePath", self.path)
-                    .load(live[leaf])
-                )
+            df = self._read_files(live[leaf])
             drop_cols: list[str] = []
             keys = list(cluster_by or [])
             if zorder:
@@ -1244,118 +1199,6 @@ class PartitionedTable:
             ):
                 rewritten += 1
         return rewritten
-
-    def _compact_floor_token_path(self) -> str:
-        """Sibling token (outside the table dir, like ``.precompact``)
-        recording the floor watermark a running ``compact()`` collapses
-        — written before the swap, consumed by the happy path or
-        crash-point-3 recovery, deleted last."""
-        return self.path.rstrip("/") + ".compact_floor.json"
-
-    def _read_compact_floor_token_doc(self, fs, Path) -> dict | None:
-        """Main file wins when parseable; ``.tmp-*`` leftovers are only
-        a fallback for a crash inside the replace. NOT a max-fold over
-        everything: unlike the floor/watermark, the token's legit value
-        can DECREASE across compacts (restore() shrinks max(committed)),
-        so a stale higher tmp must never outvote a valid main (r14
-        review pass 3 — it would inflate the floor past the head)."""
-        p = Path(self._compact_floor_token_path())
-        if fs.exists(p):
-            try:
-                stream = fs.open(p)
-                try:
-                    raw = bytes(stream.readAllBytes()).decode("utf-8")
-                finally:
-                    stream.close()
-                doc = json.loads(raw)
-                int(doc["floor"])  # shape check
-                return doc
-            except Exception:
-                pass  # torn main: fall back to tmp leftovers
-        best = None
-        for doc in _sidecar_entries(
-            fs, Path, self._compact_floor_token_path() + ".tmp-"
-        ):
-            try:
-                f = int(doc["floor"])
-            except Exception:
-                continue
-            if best is None or f > int(best["floor"]):
-                best = doc
-        return best  # None (legacy/absent/torn): advance falls back to "now"
-
-    def _read_compact_floor_token(self, fs, Path) -> int | None:
-        doc = self._read_compact_floor_token_doc(fs, Path)
-        return int(doc["floor"]) if doc else None
-
-    def _delete_compact_floor_token(self, fs, Path) -> None:
-        """Retire the token AND any ``.tmp-*`` strays from a crash inside
-        its replace — a stale tmp surviving a main-only delete would be
-        trusted by a LATER compact's recovery (r14 review pass 3)."""
-        for st in fs.globStatus(Path(self._compact_floor_token_path() + "*")) or []:
-            fs.delete(st.getPath(), False)
-
-    def _recover_compaction(self, fs, Path) -> None:
-        """Converge an interrupted ``compact()`` swap to a readable table.
-
-        Crash points and their signatures (root = table path, ``.compacting``
-        = staged rewrite, ``.precompact`` = renamed-away original):
-
-        1. crash before ``rename(root, .precompact)`` — root intact,
-           ``.compacting`` may exist: drop the stale staging dir.
-        2. crash between the two renames — root MISSING, ``.precompact`` and
-           ``.compacting`` both present: roll BACK (restore original,
-           drop staging) — the rewrite never became visible.
-        3. crash after ``rename(.compacting, root)`` but before marker
-           move/cleanup — root present, ``.precompact`` present: roll
-           FORWARD (salvage ``_commits`` if not yet moved, drop
-           ``.precompact``).
-
-        Every path converges to a complete table + marker set; readers never
-        see a partial mix because visibility flips only at whole-directory
-        renames.
-        """
-        root = Path(self.path)
-        staging = Path(self.path.rstrip("/") + ".compacting")
-        old = Path(self.path.rstrip("/") + ".precompact")
-        if fs.exists(root):
-            if fs.exists(old):  # crash point 3: finish the swap
-                # salvage every hidden root entry not yet moved — the
-                # same set compact() preserves (_commits, _dv, …)
-                _salvage_hidden_root_entries(fs, Path, old.toString(), self.path)
-                # the rewrite became visible at the staging→root rename,
-                # so the floor advance is owed even if compact() died
-                # before reaching it (ADVICE r13); compaction is
-                # row-preserving → the at-floor snapshot stays exact.
-                # The value comes from the pre-swap token, not "now" —
-                # batches appended after the crash keep their prefixes
-                token_doc = self._read_compact_floor_token_doc(fs, Path)
-                self._advance_history_floor(
-                    exact=True,
-                    floor_value=token_doc.get("floor") if token_doc else None,
-                )
-                # a batch that committed during the staging write left
-                # its files in the old root: salvage everything the
-                # rewrite did not consume (r14 review pass 4)
-                _salvage_unconsumed_data_files(
-                    fs,
-                    Path,
-                    old.toString(),
-                    self.path,
-                    token_doc.get("consumed") if token_doc else None,
-                    set(self.committed_batches()),
-                )
-                fs.delete(old, True)
-            if fs.exists(staging):  # crash point 1: stale staging
-                fs.delete(staging, True)
-            # consumed (or never-swapped): retire, incl. tmp strays
-            self._delete_compact_floor_token(fs, Path)
-        elif fs.exists(old):  # crash point 2: roll back
-            fs.rename(old, root)
-            if fs.exists(staging):
-                fs.delete(staging, True)
-            # rewrite never became visible: retire, incl. tmp strays
-            self._delete_compact_floor_token(fs, Path)
 
     # -- history floor -------------------------------------------------------
     #
@@ -1451,8 +1294,8 @@ class PartitionedTable:
         purge_through: int | None = None,
     ) -> None:
         """Advance the floor. ``floor_value`` is the watermark RECORDED
-        AT REWRITE TIME (in the overwrite marker / the compact floor
-        token): a replay after a crash must advance to that value, not
+        AT REWRITE TIME (in the overwrite marker): a replay after a
+        crash must advance to that value, not
         to max(committed()) at replay time — batches appended between
         the crash and the recovery kept their prefixes and stay exactly
         reconstructible, and an inflated floor would refuse them forever.
@@ -1519,7 +1362,6 @@ class PartitionedTable:
         jvm = self.spark._jvm
         Path = jvm.org.apache.hadoop.fs.Path
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        self._recover_compaction(fs, Path)
         self._recover_overwrite(fs, Path)
         staging_root = Path(posixpath.join(self.path, "_staging"))
         if not fs.exists(staging_root):
@@ -1544,18 +1386,28 @@ class PartitionedTable:
 
         Parquet has no row-level transaction log, so the merge is
         read-modify-replace scoped to the partition: read current rows,
-        anti-join out the keys being updated, union the updates, drop
-        and rewrite the partition. On Delta this maps to ``MERGE INTO``
-        (transactional); here the replace window is the delete+append.
-        Scoping to one partition keeps the rewrite proportional to the
-        partition, not the table — the same reason the reference
-        scopes refresh to a day (delta_io.py:104-107).
+        anti-join out the keys being updated, union the updates, and
+        commit the result as ONE scoped :meth:`overwrite_partitions` —
+        crash-atomic like a refresh, with CHECK constraints validated
+        before anything stages, so a rejected merge leaves the partition
+        untouched. Like every row-changing rewrite it advances the
+        history floor. On Delta this maps to ``MERGE INTO``. Scoping to
+        one partition keeps the rewrite proportional to the partition,
+        not the table — the same reason the reference scopes refresh to
+        a day (delta_io.py:104-107).
 
         Rows in ``updates`` that do NOT belong to the target partition are
         rejected loudly: appending them would bypass the anti-join dedup
         (which only read the target partition) and silently duplicate keys
         elsewhere.
         """
+        scope = {
+            c: partition_values[c]
+            for c in self.partition_cols
+            if partition_values.get(c) is not None
+        }
+        if not scope:
+            raise ValueError("merge_partition needs at least one partition value")
         present = [k for k in partition_values if k in updates.columns]
         if present:
             cond = None
@@ -1569,44 +1421,27 @@ class PartitionedTable:
                     f"target partition {partition_values} — merge them via their "
                     "own partition's merge_partition call"
                 )
-        current = None
-        if self.exists():
-            # read the target partition from LIVE files only (the same
-            # rule compact/purge/compact_partitions follow): a raw
-            # directory load would bake a crashed writer's uncommitted
-            # b{id}- partials into the merged output, and the batch's
-            # later replay would then duplicate those rows permanently
-            # (r14 review pass 4 — the exact hazard _live_data_files
-            # documents).
-            live = self._live_data_files()
-            if self.partition_cols:
-                files = [
-                    f
-                    for leaf, (sc, _) in self._leaf_scopes_counts(live).items()
-                    if all(
-                        dict(sc).get(k) == str(v) for k, v in partition_values.items()
-                    )
-                    for f in live[leaf]
-                ]
-            else:
-                files = [f for fl in live.values() for f in fl]
-            if files:
-                with _string_partitions(self.spark):
-                    current = self._restore_partition_types(
-                        self.spark.read.format(self.fmt)
-                        .option("basePath", self.path)
-                        .load(files)
-                    )
-        if current is not None:
-            remainder = current.join(
+        # read the target partition from LIVE files only (the same rule
+        # compact/purge/compact_partitions follow): a raw directory load
+        # would bake a crashed writer's uncommitted b{id}- partials into
+        # the merged output, and the batch's later replay would then
+        # duplicate those rows permanently (r14 review pass 4 — the exact
+        # hazard _live_data_files documents).
+        live = self._live_data_files()
+        files = [
+            f
+            for leaf, (sc, _) in self._leaf_scopes_counts(live).items()
+            if all(dict(sc).get(k) == str(v) for k, v in partition_values.items())
+            for f in live[leaf]
+        ]
+        if files:
+            remainder = self._read_files(files).join(
                 updates.select(*key_cols).distinct(), on=key_cols, how="left_anti"
             )
             merged = remainder.select(*updates.columns).unionByName(updates)
         else:
             merged = updates  # table/partition has no live rows → pure insert
-        merged = merged.localCheckpoint()  # materialize BEFORE deleting inputs
-        self.delete_partitions(**partition_values)
-        self.append(merged)
+        self.overwrite_partitions(merged, **scope)
 
     # -- partition management ----------------------------------------------
 
@@ -1620,8 +1455,7 @@ class PartitionedTable:
 
         Values match the UNESCAPED partition values via the file index —
         a raw path glob missed hive-escaped directories (day='2024:03'
-        lives at ``day=2024%3A03``), silently no-oping the delete and
-        letting ``merge_partition`` duplicate every matched key. Pass
+        lives at ``day=2024%3A03``), silently no-oping the delete. Pass
         ``HIVE_NULL_PARTITION`` to target the null-valued leaves."""
         given = {
             c: str(partition_values[c])
@@ -1638,7 +1472,6 @@ class PartitionedTable:
         # table deletes the wrong files (a mid-swap leaf is absent from
         # the live index, so the later marker replay would resurrect it),
         # and the floor watermark below must see the salvaged _commits
-        self._recover_compaction(fs, Path)
         self._recover_overwrite(fs, Path)
         deepest = max(i for i, c in enumerate(self.partition_cols) if c in given)
         victims: set[str] = set()
@@ -1868,12 +1701,7 @@ class PartitionedTable:
                 "collapsed (compact() rewrites files, like Delta OPTIMIZE + "
                 "VACUUM). Only the current state is readable via read()."
             )
-        with _string_partitions(self.spark):
-            return self._restore_partition_types(
-                self.spark.read.format(self.fmt)
-                .option("basePath", self.path)
-                .load(files)
-            )
+        return self._read_files(files)
 
     def restore(self, batch_id: int) -> int:
         """Roll the table back to exactly its state after ``batch_id``
@@ -1967,7 +1795,8 @@ class PartitionedTable:
         Reclaims, in order:
 
         1. interrupted state: ``recover()`` first rolls any half-finished
-           compaction/overwrite swap forward or back, so vacuum never
+           overwrite swap (refresh/compact/purge) forward, or drops its
+           staging when no intent marker was written, so vacuum never
            races a swap window, and rolls every committed batch's staged
            files forward into the table — never deleting them;
         2. the remaining ``_staging/`` trees — a writer that crashed or
@@ -1987,9 +1816,10 @@ class PartitionedTable:
         Path = jvm.org.apache.hadoop.fs.Path
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        # recovery FIRST, even when the root is missing: compact()'s
-        # crash point between its two renames leaves the table only in
-        # the .precompact shadow, exactly the state recover() rolls back
+        # recovery FIRST, even when the root is missing: an unpartitioned
+        # overwrite/compact/purge crashing between its two root renames
+        # leaves the table only in the .preoverwrite shadow and staging,
+        # exactly the state recover() rolls forward
         self.recover()
         if not fs.exists(root):
             return 0
@@ -2054,7 +1884,7 @@ class PartitionedTable:
         try:
             return next(_visible_files(fs, root), None) is not None
         except Py4JJavaError:
-            return False  # no root (or a compaction swap moved it mid-walk)
+            return False  # no root (or a whole-root swap moved it mid-walk)
 
 
 class DeletionVectors:
@@ -2269,13 +2099,7 @@ class DeletionVectors:
             files = [f for leaf in leaves for f in live[leaf]]
             if not files:
                 return 0
-            with _string_partitions(self.table.spark):
-                src = self.table._restore_partition_types(
-                    self.table.spark.read.format(self.table.fmt)
-                    .option("basePath", self.table.path)
-                    .load(files)
-                )
-            clean = src.join(dead, self.key_col, "left_anti")
+            clean = self.table._read_files(files).join(dead, self.key_col, "left_anti")
             self.table.overwrite_partitions(
                 clean,
                 _validate=False,
@@ -2292,14 +2116,14 @@ class DeletionVectors:
             files = [f for fl in live.values() for f in fl]
             if not files:
                 return 0
-            with _string_partitions(self.table.spark):
-                src = self.table._restore_partition_types(
-                    self.table.spark.read.format(self.table.fmt)
-                    .option("basePath", self.table.path)
-                    .load(files)
-                )
-            clean = src.join(dead, self.key_col, "left_anti")
-            if clean.isEmpty():
+            clean = self.table._read_files(files).join(dead, self.key_col, "left_anti")
+            if not self.table.overwrite_partitions(
+                clean,
+                _validate=False,
+                _dv_purge=True,
+                _purge_through=through,
+                _consumed={"": [f.rsplit("/", 1)[-1] for f in files]},
+            ):
                 # unpartitioned base whose rows are ALL deleted:
                 # overwrite_partitions cannot express "replace the whole
                 # table with empty" (the empty-commit guard no-ops it),
@@ -2308,13 +2132,6 @@ class DeletionVectors:
                 # (r14 review pass 4). Keep them live: reads stay correct
                 # through the anti-join; the purge just reports 0.
                 return 0
-            self.table.overwrite_partitions(
-                clean,
-                _validate=False,
-                _dv_purge=True,
-                _purge_through=through,
-                _consumed={"": [f.rsplit("/", 1)[-1] for f in files]},
-            )
             n = 1
         self._advance_watermark(through)
         return n
@@ -2406,12 +2223,7 @@ def change_feed(
                     f"files are gone — history was collapsed (compact/purge)"
                 )
             continue  # empty commit: no change rows
-        with _string_partitions(spark):
-            df = table._restore_partition_types(
-                spark.read.format(table.fmt)
-                .option("basePath", table.path)
-                .load(files_by_version[v])
-            )
+        df = table._read_files(files_by_version[v])
         if dv is not None and dv._has_dv_rows():
             # Refuse re-insertion under a LIVE tombstone: DV read()
             # anti-joins all unpurged deleted keys regardless of insert

@@ -1,19 +1,23 @@
-"""Crash-test compact()'s swap window (r2 verdict item 8).
+"""Crash-test compact()'s commit (r2 verdict item 8).
 
-compact() publishes via: write staging (``.compacting``) → rename root →
-``.precompact`` → rename staging → root → move ``_commits`` → delete
-``.precompact``. Each test reproduces the exact on-disk state a crash at
-one of those points leaves behind, then asserts ``recover()`` converges to
-a complete, readable table with its commit history intact — the
-"readers never see a partial table" guarantee the parquet fallback owes
-to Delta parity.
+compact() commits through ``overwrite_partitions``: stage the rewrite
+(``.overwriting``) → write the intent marker
+(``.overwrite_pending.json``) → per leaf, rename live → ``.preoverwrite``
+shadow, rename staged → live, salvage (hidden root entries for the
+unpartitioned whole-root swap; unconsumed racer files), delete the
+shadow → advance the history floor → delete the marker. Each test
+injects a crash at one of those steps, then asserts ``recover()`` (or
+the next ``compact()``) converges to a complete, readable table with its
+commit history intact and the floor advanced exactly as the happy path
+would — the "readers never see a partial table" guarantee the parquet
+fallback owes to Delta parity.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
+from incremental_dagster_delta_spark import tableio
 from incremental_dagster_delta_spark.tableio import PartitionedTable
 
 import pytest
@@ -23,8 +27,8 @@ import pytest
 pytestmark = pytest.mark.slow
 
 
-def _make_table(spark, path: str) -> PartitionedTable:
-    table = PartitionedTable(spark, path, ["day"])
+def _make_table(spark, path: str, partition_cols=("day",)) -> PartitionedTable:
+    table = PartitionedTable(spark, path, list(partition_cols))
     df = spark.createDataFrame(
         [(i, f"v{i}", "2024-01-0" + str(1 + i % 2)) for i in range(10)],
         "k long, v string, day string",
@@ -33,73 +37,90 @@ def _make_table(spark, path: str) -> PartitionedTable:
     return table
 
 
+def _crashed_compact(monkeypatch, table, owner, name: str) -> None:
+    """Run ``table.compact()`` with ``owner.name`` raising, simulating
+    the process dying there."""
+
+    def crash(*args, **kwargs):
+        raise RuntimeError(f"simulated crash at {name}")
+
+    monkeypatch.setattr(owner, name, crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        table.compact()
+    monkeypatch.undo()
+
+
 def _assert_intact(table: PartitionedTable) -> None:
     assert table.read().count() == 10
     assert sorted(r["k"] for r in table.read().collect()) == list(range(10))
     assert table.committed_batches() == [1]
-    for suffix in (".compacting", ".precompact"):
+    for suffix in (".overwriting", ".overwrite_pending.json", ".preoverwrite"):
         assert not os.path.exists(table.path.rstrip("/") + suffix)
+    # row-preserving rewrite: floor at the plan-time head, at-floor exact
+    assert table._history_floor_info() == (1, True)
+    assert table.read_as_of(1).count() == 10
 
 
-def test_crash_before_first_rename(spark, tmp_path):
-    """Staging written, swap not started: root is live, staging is junk."""
+def test_crash_after_intent_marker_before_swap(spark, tmp_path, monkeypatch):
+    """Staging and marker written, no leaf swapped: readers still see the
+    old files; recovery rolls the committed rewrite FORWARD."""
     path = str(tmp_path / "t")
     table = _make_table(spark, path)
-    table.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
+    _crashed_compact(monkeypatch, table, PartitionedTable, "_complete_overwrite")
+    assert os.path.exists(path + ".overwrite_pending.json")
+    assert table.read().count() == 10
     table.recover()
     _assert_intact(table)
 
 
-def test_crash_between_renames(spark, tmp_path):
-    """Root renamed away, staging not yet promoted — the worst window:
-    the table path does not exist at all. Recovery must roll BACK."""
+def test_crash_between_leaf_swaps(spark, tmp_path, monkeypatch):
+    """First leaf swapped (its shadow not yet deleted), second leaf not
+    swapped: every leaf is whole, and recovery finishes the plan."""
     path = str(tmp_path / "t")
     table = _make_table(spark, path)
-    table.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    os.rename(path, path + ".precompact")
-    assert not os.path.exists(path)
+    _crashed_compact(monkeypatch, table, tableio, "_salvage_unconsumed_data_files")
+    assert os.path.exists(path + ".preoverwrite")
+    assert table.read().count() == 10
     table.recover()
     _assert_intact(table)
 
 
-def test_crash_after_promote_before_marker_move(spark, tmp_path):
-    """Staging promoted to root, but _commits still lives in .precompact.
-    Recovery must roll FORWARD and salvage the markers."""
+def test_crash_after_root_promote_before_sidecar_move(spark, tmp_path, monkeypatch):
+    """Unpartitioned whole-root swap: staging promoted to root, but
+    _commits still lives in the shadow. Recovery must roll FORWARD and
+    salvage the markers."""
     path = str(tmp_path / "t")
-    table = _make_table(spark, path)
-    table.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    os.rename(path, path + ".precompact")
-    os.rename(path + ".compacting", path)
-    # markers were not moved: root has none, .precompact has them
+    table = _make_table(spark, path, partition_cols=())
+    _crashed_compact(monkeypatch, table, tableio, "_salvage_hidden_root_entries")
+    # markers were not moved: root has none, the shadow has them
     assert not os.path.exists(os.path.join(path, "_commits"))
+    assert os.path.exists(os.path.join(path + ".preoverwrite", "_commits"))
     table.recover()
     _assert_intact(table)
 
 
-def test_crash_after_marker_move_before_cleanup(spark, tmp_path):
-    """Everything moved; only the .precompact delete was lost."""
+def test_crash_after_swaps_before_floor_advance(spark, tmp_path, monkeypatch):
+    """Every leaf swapped; only the floor advance and the marker delete
+    were lost."""
     path = str(tmp_path / "t")
     table = _make_table(spark, path)
-    table.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    os.rename(path, path + ".precompact")
-    os.rename(path + ".compacting", path)
-    shutil.move(os.path.join(path + ".precompact", "_commits"), os.path.join(path, "_commits"))
+    _crashed_compact(monkeypatch, table, PartitionedTable, "_advance_history_floor")
+    assert table._history_floor() == -1
     table.recover()
     _assert_intact(table)
 
 
-def test_compact_runs_recovery_first(spark, tmp_path):
-    """compact() itself must self-heal a previous interrupted swap before
-    rewriting, so a crashed compaction followed by another compaction
-    never loses data."""
+@pytest.mark.parametrize("crash_point", ["_complete_overwrite", "_advance_history_floor"])
+def test_compact_runs_recovery_first(spark, tmp_path, monkeypatch, crash_point):
+    """compact() itself must self-heal a previous interrupted commit
+    before rewriting, so a crashed compaction followed by another
+    compaction never loses data."""
     path = str(tmp_path / "t")
     table = _make_table(spark, path)
-    table.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    os.rename(path, path + ".precompact")  # crash between renames
+    _crashed_compact(monkeypatch, table, PartitionedTable, crash_point)
     n = table.compact()
     assert n > 0
-    assert table.read().count() == 10
-    assert table.committed_batches() == [1]
+    _assert_intact(table)
 
 
 def test_compact_honors_target_files_per_partition(spark, tmp_path):

@@ -50,6 +50,10 @@ def _mk(spark, path, *, batches=(1, 2)) -> PartitionedTable:
     return t
 
 
+def _crash(*args, **kwargs):
+    raise RuntimeError("simulated crash")
+
+
 def _new_day1(spark):
     return spark.createDataFrame([(100, "new", DAY1)], SCHEMA)
 
@@ -96,15 +100,16 @@ def test_legacy_marker_treated_as_row_changing(spark, tmp_path):
     assert t._history_floor_info() == (2, False)
 
 
-def test_recover_compaction_roll_forward_advances_floor(spark, tmp_path):
-    """Compact crash point 3 (staging promoted, .precompact lingers):
-    the roll-forward must advance the floor exactly like compact() would
-    have — exact=True, at-floor snapshot readable."""
+def test_recover_compaction_roll_forward_advances_floor(spark, tmp_path, monkeypatch):
+    """Compact crash after every leaf swapped but before the floor
+    advance: the marker roll-forward must advance the floor exactly like
+    compact() would have — exact=True, at-floor snapshot readable."""
     t = _mk(spark, tmp_path / "t")
-    path = t.path.rstrip("/")
-    t.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    os.rename(path, path + ".precompact")
-    os.rename(path + ".compacting", path)
+    monkeypatch.setattr(PartitionedTable, "_advance_history_floor", _crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.compact()
+    monkeypatch.undo()
+    assert t._history_floor() == -1
     t.recover()
     assert t._history_floor_info() == (2, True)
     assert t.read_as_of(2).count() == 8  # at-floor stays exact
@@ -263,24 +268,24 @@ def test_replay_floor_uses_rewrite_time_watermark_not_recovery_time(spark, tmp_p
         t.read_as_of(2)
 
 
-def test_compact_recovery_floor_uses_pre_swap_token(spark, tmp_path):
-    """Same property for compact crash-point-3: the pre-swap floor token
-    pins the recovery advance; appends landing after the crash are not
-    swallowed under an inflated floor."""
+def test_compact_recovery_floor_uses_plan_time_marker_floor(spark, tmp_path, monkeypatch):
+    """Same property for a compact that crashed after its intent marker:
+    the marker's plan-time head pins the recovery advance; appends
+    landing after the crash are not swallowed under an inflated floor."""
     t = _mk(spark, tmp_path / "t")  # batches 1, 2
     path = t.path.rstrip("/")
-    t.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    with open(path + ".compact_floor.json", "w") as f:
-        json.dump({"floor": 2}, f)
-    os.rename(path, path + ".precompact")
-    os.rename(path + ".compacting", path)
-    # crash here (point 3); appends land before recovery runs
+    monkeypatch.setattr(PartitionedTable, "_complete_overwrite", _crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.compact()
+    monkeypatch.undo()
+    assert json.load(open(path + ".overwrite_pending.json"))["floor"] == 2
+    # appends land before recovery runs (into a leaf the rewrite replaces)
     t.append_batch(spark.createDataFrame([(300, "b3", DAY2)], SCHEMA), 3)
     t.recover()
     assert t._history_floor_info() == (2, True)
     assert t.read_as_of(2).count() == 8  # at-floor exact
     assert t.read_as_of(3).count() == 9
-    assert not os.path.exists(path + ".compact_floor.json")  # token retired
+    assert not os.path.exists(path + ".overwrite_pending.json")  # marker retired
 
 
 def test_delete_partitions_advances_floor(spark, tmp_path):

@@ -334,21 +334,28 @@ def test_randomized_crashy_maintenance_converges(spark, tmp_path, seed, monkeypa
     assert glob.glob(os.path.join(t.path, "_history_floor.json.tmp-*")) == []
 
 
-def test_salvage_merges_recreated_commit_dir(spark, tmp_path):
-    """A writer that appends between a compact crash-point-3 swap and its
-    recovery recreates _commits in the promoted root; the salvage must
-    MERGE the old markers in (top-level skip-if-exists stranded batches
-    1-2 in .precompact, after which their files read as vacuum-able
-    orphans and time travel lost the history) — r14 review fallout."""
-    t = PartitionedTable(spark, str(tmp_path / "t"), ["day"])
+def test_salvage_merges_recreated_commit_dir(spark, tmp_path, monkeypatch):
+    """A writer that appends between an unpartitioned compact's root swap
+    and its recovery recreates _commits in the promoted root; the salvage
+    must MERGE the old markers in (top-level skip-if-exists stranded
+    batches 1-2 in the shadow, after which their files read as
+    vacuum-able orphans and time travel lost the history) — r14 review
+    fallout."""
+    from incremental_dagster_delta_spark import tableio
+
+    t = PartitionedTable(spark, str(tmp_path / "t"), [])
     for b in (1, 2):
         t.append_batch(
             spark.createDataFrame([(10 * b, f"p{b}", DAYS[0])], SCHEMA), b
         )
-    path = t.path.rstrip("/")
-    t.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    os.rename(path, path + ".precompact")
-    os.rename(path + ".compacting", path)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(tableio, "_salvage_hidden_root_entries", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.compact()
+    monkeypatch.undo()
     # pre-recovery append recreates _commits with only marker 3
     t.append_batch(spark.createDataFrame([(30, "p3", DAYS[1])], SCHEMA), 3)
     assert t.committed_batches() == [3]
@@ -357,35 +364,6 @@ def test_salvage_merges_recreated_commit_dir(spark, tmp_path):
     assert t.read().count() == 3
     assert t.vacuum() == 0  # nothing reads as an orphan
     assert t.read().count() == 3
-
-
-def test_compact_floor_token_main_outvotes_stale_tmp(spark, tmp_path):
-    """The token reader must prefer a parseable main file over .tmp-*
-    leftovers (token values legitimately DECREASE after restore(), so a
-    max-fold over strays could inflate the floor past the head), and
-    token retirement must remove the strays too (r14 review pass 3)."""
-    t = PartitionedTable(spark, str(tmp_path / "t"), ["day"])
-    t.append_batch(spark.createDataFrame([(1, "a", DAYS[0])], SCHEMA), 1)
-    tok = t.path.rstrip("/") + ".compact_floor.json"
-    with open(tok, "w") as f:
-        json.dump({"floor": 1}, f)
-    with open(tok + ".tmp-stale", "w") as f:
-        json.dump({"floor": 9}, f)  # stray from an older crashed replace
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(t.path).getFileSystem(spark._jsc.hadoopConfiguration())
-    assert t._read_compact_floor_token(fs, Path) == 1  # main wins
-    os.remove(tok)
-    assert t._read_compact_floor_token(fs, Path) == 9  # tmp fallback
-    with open(tok, "w") as f:
-        json.dump({"floor": 1}, f)
-    t._delete_compact_floor_token(fs, Path)
-    assert glob.glob(tok + "*") == []  # strays retired with the main
-    # compact() end-to-end leaves no token residue either
-    t.append_batch(spark.createDataFrame([(2, "b", DAYS[0])], SCHEMA), 2)
-    t.compact()
-    assert glob.glob(tok + "*") == []
-    assert t._history_floor_info() == (2, True)
 
 
 # -- r14 review pass 4: racer fences, purge resurrection, fail-loud metrics ----
@@ -466,11 +444,11 @@ def test_change_feed_refuses_crashed_purge_rewrite(spark, tmp_path):
     assert [(r["k"], r["_change_type"]) for r in feed.collect()] == [(2, "delete")]
 
 
-def test_compact_salvages_batch_committed_during_staging(spark, tmp_path):
-    """A batch that commits while compact() stages lands its files in
-    the old root; completion/recovery must salvage them into the new
-    root (the consumed fence) instead of destroying them with
-    .precompact while their marker survives — permanent row loss under a
+def test_compact_salvages_batch_committed_during_staging(spark, tmp_path, monkeypatch):
+    """A batch that commits while compact() stages lands its files in a
+    leaf the rewrite replaces; completion/recovery must salvage them into
+    the new leaf (the consumed fence) instead of destroying them with the
+    shadow while their marker survives — permanent row loss under a
     row-preserving operation."""
     t = PartitionedTable(spark, str(tmp_path / "t"), ["day"])
     for b in (1, 2):
@@ -478,27 +456,24 @@ def test_compact_salvages_batch_committed_during_staging(spark, tmp_path):
             spark.createDataFrame([(10 * b, f"p{b}", DAYS[b % 2])], SCHEMA), b
         )
     path = t.path.rstrip("/")
-    live = t._live_data_files()
-    consumed = sorted(
-        (leaf + "/" if leaf else "") + f.rsplit("/", 1)[-1]
-        for leaf, fl in live.items()
-        for f in fl
-    )
-    # stage the rewrite of the CURRENT snapshot
-    t.read().write.mode("overwrite").partitionBy("day").parquet(path + ".compacting")
-    # racer batch 3 commits while staging "runs"
-    t.append_batch(spark.createDataFrame([(30, "p3", DAYS[2])], SCHEMA), 3)
-    with open(path + ".compact_floor.json", "w") as f:
-        json.dump({"floor": 2, "consumed": consumed}, f)
-    os.rename(path, path + ".precompact")
-    os.rename(path + ".compacting", path)
-    # crash point 3; recovery owes marker salvage AND the racer's files
+
+    def racer_then_crash(self, fs, Path):
+        # racer batch 3 commits into a rewritten leaf after staging, then
+        # the compacting process dies before its marker rolls forward
+        t.append_batch(spark.createDataFrame([(30, "p3", DAYS[0])], SCHEMA), 3)
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(PartitionedTable, "_complete_overwrite", racer_then_crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.compact()
+    monkeypatch.undo()
+    # recovery owes the swap AND the racer's files
     t.recover()
     assert t.committed_batches() == [1, 2, 3]
     assert sorted(r["k"] for r in t.read().collect()) == [10, 20, 30]
-    assert t._history_floor_info() == (2, True)  # token floor, not "now"
+    assert t._history_floor_info() == (2, True)  # marker floor, not "now"
     assert t.read_as_of(3).count() == 3  # racer stays exactly readable
-    assert not os.path.exists(path + ".precompact")
+    assert not os.path.exists(path + ".preoverwrite")
 
 
 def test_leaf_overwrite_salvages_committed_racer_not_partials(spark, tmp_path):

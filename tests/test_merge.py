@@ -62,3 +62,28 @@ def test_merge_into_empty_table(spark, tmp_path):
     table.merge_partition(updates, ["k"], day="2024-01-01")
     assert table.read().count() == 1
     assert table.read().where(F.col("v") == "x").count() == 1
+
+
+def test_rejected_merge_leaves_partition_unchanged(spark, tmp_path):
+    """A merge refused by a CHECK constraint must not touch the target
+    partition: the constraint is checked before anything stages, and
+    the partition is replaced in the same transaction that writes it."""
+    import pytest
+
+    from incremental_dagster_delta_spark.tableio import CheckConstraintViolation
+
+    table = PartitionedTable(spark, str(tmp_path / "t"), ["day"])
+    table.append(
+        spark.createDataFrame(
+            [(1, 10, "d1"), (2, 20, "d1"), (3, 30, "d2")], "k long, v long, day string"
+        ).repartition("day")
+    )
+    table.add_check_constraint("v_positive", "v > 0")
+    bad = spark.createDataFrame([(2, -5, "d1")], "k long, v long, day string")
+    with pytest.raises(CheckConstraintViolation):
+        table.merge_partition(bad, ["k"], day="d1")
+    assert sorted((r["k"], r["v"], r["day"]) for r in table.read().collect()) == [
+        (1, 10, "d1"),
+        (2, 20, "d1"),
+        (3, 30, "d2"),
+    ]

@@ -12,6 +12,7 @@ import glob
 
 import pytest
 
+from incremental_dagster_delta_spark import tableio
 from incremental_dagster_delta_spark.tableio import (
     DeletionVectors,
     PartitionedTable,
@@ -93,20 +94,27 @@ def test_compact_preserves_dv_constraints_and_watermark(spark, tmp_path):
         )
 
 
-def test_recover_salvages_all_hidden_entries_from_precompact(spark, tmp_path):
-    """Crash point 3 (root swapped in, .precompact not yet cleaned):
-    recover() must move every hidden entry, not just _commits."""
-    t = _base(spark, tmp_path / "t")
+def test_recover_salvages_all_hidden_entries_from_shadow(spark, tmp_path, monkeypatch):
+    """Unpartitioned compact crashing after the whole-root swap, before
+    the hidden-entry salvage: recover() must move every hidden entry out
+    of the ``.preoverwrite`` shadow, not just _commits."""
+    t = _base(spark, tmp_path / "t", partitioned=False)
     t.add_check_constraint("k_positive", "k > 0")
     dv = DeletionVectors(t, "k")
     dv.mark_deleted(_keys(spark, 1), 1)
 
-    # simulate the crash: everything hidden still lives in .precompact
+    def crash(*args, **kwargs):
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(tableio, "_salvage_hidden_root_entries", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.compact()
+    monkeypatch.undo()
+    # the crash state: everything hidden still lives in the shadow
     root = tmp_path / "t"
-    pre = tmp_path / "t.precompact"
-    pre.mkdir()
+    pre = tmp_path / "t.preoverwrite"
     for entry in ("_dv", "_constraints.json", "_commits"):
-        (root / entry).rename(pre / entry)
+        assert (pre / entry).exists() and not (root / entry).exists()
 
     t.recover()
     assert not pre.exists()
