@@ -645,8 +645,15 @@ def read_delta_log(
     schedule, the same coupling real Delta time travel has). Used by the
     round-trip tests; a foreign reader does the same replay from the
     same bytes."""
+    from pyspark.sql.types import StructType
+
     log_dir = _log_dir(table)
     state, _proto, meta, _tomb = _replay(log_dir, version)
+    schema = (
+        StructType.fromJson(json.loads(meta["schemaString"]))
+        if meta is not None and meta.get("schemaString")
+        else None
+    )
     if column_range is not None:
         col, lo, hi = column_range
         files = files_in_range(log_dir, col, lo, hi, version, files=state)
@@ -660,27 +667,18 @@ def read_delta_log(
         # error (r14 review pass 5)
         if not _existing_versions(log_dir) and _last_checkpoint_info(log_dir) is None:
             raise ValueError(f"no exported snapshot under {log_dir}")
-        if meta is None or not meta.get("schemaString"):
+        if schema is None:
             raise ValueError(
                 f"empty selection under {log_dir} and no metaData schema to type it"
             )
-        from pyspark.sql.types import StructType
-
-        df = table.spark.createDataFrame(
-            [], StructType.fromJson(json.loads(meta["schemaString"]))
-        )
-        if column_range is not None:
-            col, lo, hi = column_range
-            df = df.where((df[col] >= lo) & (df[col] <= hi))
-        return df
-    from incremental_dagster_delta_spark.tableio import _string_partitions
-
-    with _string_partitions(table.spark):
-        df = table._restore_partition_types(
-            table.spark.read.format(table.fmt)
-            .option("basePath", table.path)
-            .load([posixpath.join(table.path, rel) for rel in files])
-        )
+        df = table.spark.createDataFrame([], schema)
+    else:
+        # typed by the replayed metaData, as a foreign reader would: no
+        # inference, partition values parsed to their logged types
+        reader = table.spark.read.format(table.fmt).option("basePath", table.path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.load([posixpath.join(table.path, rel) for rel in files])
     if column_range is not None:
         col, lo, hi = column_range
         df = df.where((df[col] >= lo) & (df[col] <= hi))
@@ -724,10 +722,9 @@ class DeltaLogExporter:
     def _meta_action(self, created: int | None = None) -> dict:
         """``created`` carries the ORIGINAL createdTime forward when a
         schema change re-emits metaData (the spec field is table
-        creation time, not schema-change time). ``merge_schema=True``:
-        without it Spark infers from an ARBITRARY footer, so an evolved
-        table's exported schema would depend on listing order."""
-        schema_json = self.table.read(merge_schema=True).schema.json()
+        creation time, not schema-change time). The schema is the
+        table's recorded one — what ``read()`` serves, no Spark job."""
+        schema_json = self._schema_json()
         return {
             "metaData": {
                 "id": str(uuid.uuid5(_TABLE_ID_NS, self.table.path)),
@@ -738,6 +735,10 @@ class DeltaLogExporter:
                 "createdTime": int(created if created is not None else time.time() * 1000),
             }
         }
+
+    def _schema_json(self) -> str:
+        schema = self.table._schema()
+        return (schema if schema is not None else self.table.read().schema).json()
 
     def _add_action(self, rel: str, info: dict) -> dict:
         add = {
@@ -790,16 +791,14 @@ class DeltaLogExporter:
         # schema evolution: a foreign reader takes metaData.schemaString
         # as THE table schema, so a widened table must re-emit metaData
         # or new columns silently vanish from its reads (r14 review
-        # pass 5). A parquet schema can only change when the FILE SET
-        # changes, so the merged-schema read (every footer) is paid only
-        # on exports that already ship file actions — never on no-ops.
+        # pass 5). Writes widen the record before they commit files, so
+        # the check rides exports that already ship file actions.
         meta_changed = (
             bool(added or removed)
             and last >= 0
             and bool(live)
             and seen_meta is not None
-            and self.table.read(merge_schema=True).schema.json()
-            != seen_meta.get("schemaString")
+            and self._schema_json() != seen_meta.get("schemaString")
         )
         if last >= 0 and not added and not removed and not meta_changed:
             return -1

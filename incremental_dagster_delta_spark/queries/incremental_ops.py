@@ -199,10 +199,9 @@ def q_delta_append(spark, sf_dir):
 )
 def q_partitioned_write(spark, sf_dir):
     """Hive partitionBy incl. the data-derived word_length column
-    (reference processed.py:34): partition columns come back as strings
-    on read, matching the reference's string-typed partition values
-    (the driver hash stringifies cells, so DuckDB's BIGINT compares
-    equal to Spark's string partition value)."""
+    (reference processed.py:34): partition columns read back with the
+    types they were written with, from the table's recorded schema —
+    ``day`` as string, ``word_length`` as bigint like the oracle's."""
     root = _fixture("pwrite")
     tdir = _tmp("pwrite_table")
     try:
@@ -915,7 +914,7 @@ def q_exactly_once_publish(spark, sf_dir):
 )
 def q_schema_evolution(spark, sf_dir):
     """Schema evolution on append (Delta mergeSchema parity): wave 2
-    adds a ``score`` column; a merge-schema read surfaces the union
+    adds a ``score`` column; the plain read serves the recorded union
     schema with NULLs for wave-1 rows — no rewrite of old files, no
     reader break. The report pins per-day row counts AND the null
     accounting for the late column (wave 1's two 08-01 rows + one
@@ -937,7 +936,7 @@ def q_schema_evolution(spark, sf_dir):
             )
         )
         out = (
-            tbl.read(merge_schema=True)
+            tbl.read()
             .groupBy("day")
             .agg(
                 F.count("*").alias("n_rows"),

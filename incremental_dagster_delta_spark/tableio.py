@@ -61,6 +61,11 @@ commit:
   Closing that needs an atomic log commit (Delta's optimistic CAS);
   under this layout, quiesce writers around maintenance when strict
   loss-freedom is required.
+- **two writers widening the schema at the same time, in different
+  ways**: the ``_schema.json`` record is replaced whole and the last
+  ``_sidecar_replace`` wins, so one widening can be lost — its column
+  then vanishes from reads and the exported log. Serialize
+  schema-changing writes; writes that add no column never rewrite it.
 """
 
 from __future__ import annotations
@@ -70,12 +75,12 @@ import os
 import posixpath
 import urllib.parse
 import uuid
-from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 class CheckConstraintViolation(RuntimeError):
@@ -97,7 +102,7 @@ def _visible_files(fs, root):
     never descending into or yielding a ``_``/``.``-prefixed entry —
     Spark's scan semantics. Such entries are SIDECAR state
     (``_commits``, ``_staging``, the ``_dv`` deletion-vector table,
-    ``_dv_applied``, ``_constraints.json``, partition-schema hints),
+    ``_dv_applied``, ``_constraints.json``, the ``_schema.json`` record),
     never base-table data, so every walk that inventories data files by
     their ``b{id}-`` prefix uses this one: a nested sidecar's batch ids
     are an INDEPENDENT sequence and must never be checked against (or
@@ -124,8 +129,8 @@ def _visible_files(fs, root):
 def _salvage_hidden_root_entries(fs, Path, old_root: str, new_root: str) -> None:
     """Move every ``_``/``.``-prefixed child of ``old_root`` into
     ``new_root`` during a whole-root swap: commit markers, the ``_dv``
-    sidecar, its ``_dv_applied`` watermark, ``_constraints.json``,
-    partition-schema hints. Salvaging only ``_commits`` (the pre-r12
+    sidecar, its ``_dv_applied`` watermark, ``_constraints.json``, the
+    ``_schema.json`` record. Salvaging only ``_commits`` (the pre-r12
     behavior) silently destroyed the other sidecars on an unpartitioned
     compact()/purge()/overwrite — CHECK constraints dropped and
     soft-deleted rows resurrected (ADVICE r11). Directories MERGE
@@ -269,9 +274,9 @@ def _sidecar_entries(fs, Path, path: str) -> list[dict]:
 
 def _sidecar_replace(fs, Path, path: str, doc: dict) -> None:
     """Crash-safe replace of a tiny monotonic JSON sidecar (history
-    floor, purge watermark). Callers must only ever advance the value —
-    the trailing cleanup deletes stale tmp leftovers on the grounds that
-    their values are <= the one just written."""
+    floor, purge watermark, table schema). Callers must only ever
+    advance the value — the trailing cleanup deletes stale tmp leftovers
+    on the grounds that their values are <= the one just written."""
     tmp = Path(path + f".tmp-{uuid.uuid4().hex}")
     out = fs.create(tmp, True)
     try:
@@ -284,23 +289,18 @@ def _sidecar_replace(fs, Path, path: str, doc: dict) -> None:
         fs.delete(st.getPath(), False)
 
 
-@contextmanager
-def _string_partitions(spark: SparkSession):
-    """Scope-disable hive partition-value type inference around an eager
-    ``load()``: partition values must come back as the strings that were
-    written (reference's string-typed partition columns,
-    delta_io.py:108-110) regardless of who built the session — under a
-    default session ``month=03`` infers as int 3 and the zero-padding is
-    unrecoverable (r4: the one red q_refresh_overwrite driver row).
-    load() resolves partition schema eagerly, so set/restore around it is
-    sufficient and leaves the caller's session conf untouched."""
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every nested field, array element and map value
+    nullable and no field metadata: the form the table schema records
+    and compares, so writes that differ only in Spark's nullability
+    inference agree."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class PartitionedTable:
@@ -332,7 +332,15 @@ class PartitionedTable:
         Returns False (and writes nothing) for an empty batch — the
         empty-commit guard at reference delta_io.py:85-86.
         """
-        return self._write(df, mode="append")
+        if df.isEmpty():
+            return False
+        self._validate_constraints(df)
+        self._fold_schema(df.schema)
+        writer = df.write.format(self.fmt).mode("append")
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        writer.save(self.path)
+        return True
 
     def overwrite_partitions(
         self,
@@ -364,7 +372,9 @@ class PartitionedTable:
            matching the scope but absent from the staged set — those are
            DROPPED in the same transaction (full ``replaceWhere``: a
            ``word_length`` leaf whose value vanished doesn't survive);
-        3. persist the plan in a sibling ``…overwrite_pending.json``
+        3. fold ``df``'s schema into the table's schema record (raises on
+           a column type conflict, before anything commits), then
+           persist the plan in a sibling ``…overwrite_pending.json``
            intent marker (written only AFTER staging completes, so marker
            present ⇒ staged data complete ⇒ recovery always rolls
            FORWARD);
@@ -487,6 +497,7 @@ class PartitionedTable:
                 plan.append({"leaf": leaf, "action": "drop", "files": names})
         if not plan:
             return False
+        self._fold_schema(df.schema)
         # marker written tmp+rename: its whole contract is "present ⇒
         # complete plan ⇒ roll FORWARD", so a torn in-place write would
         # wedge every later recovery on json.loads
@@ -537,8 +548,6 @@ class PartitionedTable:
         # on happy paths left recovered rewrites below the true floor
         # silently readable).
         self._complete_overwrite(fs, Path)
-        if not empty:
-            self._record_partition_schema(df)
         return not empty
 
     # sibling paths (outside the table dir → never visible to readers)
@@ -682,17 +691,6 @@ class PartitionedTable:
             if fs.exists(p):
                 fs.delete(p, True)
 
-    def _write(self, df: DataFrame, mode: str) -> bool:
-        if df.isEmpty():
-            return False
-        self._validate_constraints(df)
-        writer = df.write.format(self.fmt).mode(mode)
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.save(self.path)
-        self._record_partition_schema(df)
-        return True
-
     # -- CHECK constraints ----------------------------------------------------
     #
     # Delta-parity write-path validation (Delta: ALTER TABLE ... ADD
@@ -781,70 +779,88 @@ class PartitionedTable:
                 f"write to {self.path} rejected: CHECK constraint violations {bad}"
             )
 
-    # -- partition-column type fidelity -------------------------------------
+    # -- table schema ---------------------------------------------------------
     #
-    # Hive partition values live in DIRECTORY NAMES, so their types are
-    # gone by read time and Spark's inference guesses them back — wrongly
-    # for zero-padded strings (``month=03`` → int 3, padding
-    # unrecoverable; r4's one red q_refresh_overwrite driver row came
-    # from exactly this under a default-conf session). Delta solves it by
-    # recording the schema in the transaction log; we do the parquet
-    # equivalent: persist the partition columns' dtypes in a one-line
-    # ``_partition_schema.json`` at write time, read partition values
-    # with inference DISABLED (strings, padding intact), and cast each
-    # back to its recorded type. String partitions stay byte-identical;
-    # numeric partitions regain their true type.
+    # Partition values live in directory names and each parquet footer
+    # holds only the columns its file was written with, so Spark's
+    # inference guesses a table's schema (``month=03`` → int 3) from one
+    # arbitrary footer. Like Delta's log ``metaData``, ``_schema.json``
+    # records it: data fields in first-written order, then
+    # ``partition_cols``, all nullable. Every write folds its schema in
+    # before its commit point (a new column widens the record, a type
+    # conflict raises and nothing commits), and every load passes the
+    # record to ``spark.read.schema``, so Spark infers nothing and
+    # building a read fires no job. A root with no record (never
+    # committed through this class) loads the way Spark loads a parquet
+    # directory.
 
-    def _record_partition_schema(self, df: DataFrame) -> None:
-        if not self.partition_cols:
-            return
-        types = {
-            f.name: f.dataType.simpleString()
-            for f in df.schema.fields
-            if f.name in self.partition_cols
-        }
+    def _schema_path(self) -> str:
+        return posixpath.join(self.path, "_schema.json")
+
+    def _schema(self) -> StructType | None:
+        """The recorded table schema: the union by field name of every
+        readable ``_schema.json`` entry, ``.tmp-*`` leftovers included
+        (the :func:`_sidecar_replace` crash contract), data fields first,
+        then ``partition_cols``. None when the root holds no record."""
         jvm = self.spark._jvm
         Path = jvm.org.apache.hadoop.fs.Path
-        p = Path(posixpath.join(self.path, "_partition_schema.json"))
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        out = fs.create(p, True)
-        out.write(bytearray(json.dumps(types).encode("utf-8")))
-        out.close()
+        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fields: dict[str, StructField] = {}
+        for doc in _sidecar_entries(fs, Path, self._schema_path()):
+            try:
+                for f in StructType.fromJson(doc).fields:
+                    fields.setdefault(f.name, f)
+            except Exception:
+                continue
+        return self._ordered(fields) if fields else None
 
-    def _partition_types(self) -> dict[str, str]:
+    def _ordered(self, fields: dict[str, StructField]) -> StructType:
+        parts = [fields[c] for c in self.partition_cols if c in fields]
+        return StructType([f for n, f in fields.items() if n not in self.partition_cols] + parts)
+
+    def _fold_schema(self, schema: StructType) -> None:
+        """Fold a write's ``schema`` into the record before the write
+        commits. Rewrites the record only when a field is added, then
+        re-reads it until it holds every field: a concurrent writer's
+        replace may delete this one's tmp file or overwrite its result.
+        Raises ValueError when a field's type differs from the recorded
+        one."""
         jvm = self.spark._jvm
         Path = jvm.org.apache.hadoop.fs.Path
-        p = Path(posixpath.join(self.path, "_partition_schema.json"))
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return _read_json(fs, p)
+        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        for attempt in range(5):
+            cur = self._schema()
+            fields = {f.name: f for f in cur.fields} if cur is not None else {}
+            added = False
+            for f in schema.fields:
+                typ = _nullable(f.dataType)
+                if f.name not in fields:
+                    fields[f.name] = StructField(f.name, typ, True)
+                    added = True
+                elif fields[f.name].dataType != typ:
+                    raise ValueError(
+                        f"write to {self.path} rejected: column {f.name!r} is "
+                        f"{typ.simpleString()}, the table records "
+                        f"{fields[f.name].dataType.simpleString()}"
+                    )
+            if not added:
+                return
+            try:
+                _sidecar_replace(fs, Path, self._schema_path(), self._ordered(fields).jsonValue())
+            except Py4JJavaError:
+                if attempt == 4:
+                    raise
 
     def _read_files(self, files: list[str]) -> DataFrame:
-        """The rows of exactly ``files`` (paths under the table root),
-        partition columns parsed from their leaf paths as strings and cast
-        back to the recorded types — the load behind every maintenance
-        rewrite and time-travel read."""
-        with _string_partitions(self.spark):
-            return self._restore_partition_types(
-                self.spark.read.format(self.fmt).option("basePath", self.path).load(files)
-            )
-
-    def _restore_partition_types(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql.types import NullType
-
-        types = self._partition_types()
-        for c in self.partition_cols:
-            if c not in df.columns:
-                continue
-            typ = types.get(c, "string")
-            if isinstance(df.schema[c].dataType, NullType):
-                # a loaded subset holding ONLY null-valued leaves infers
-                # the partition column as VOID, which partitionBy refuses
-                # to write back and comparisons silently void out — pin
-                # it to the recorded (or default string) type
-                df = df.withColumn(c, F.col(c).cast(typ))
-            elif typ != "string":
-                df = df.withColumn(c, F.col(c).cast(typ))
-        return df
+        """The rows of exactly ``files`` (paths under the table root, or
+        the root itself), loaded with the recorded schema — the one load
+        behind ``read()``, every maintenance rewrite and time-travel
+        read."""
+        reader = self.spark.read.format(self.fmt).option("basePath", self.path)
+        schema = self._schema()
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(files)
 
     # -- idempotent streaming append (exactly-once per micro-batch) ---------
 
@@ -862,7 +878,9 @@ class PartitionedTable:
         1. if ``_commits/{batch_id}`` exists, finish any pending
            roll-forward of that commit and return False (replay no-op);
         2. validate, then stage the rows into a private
-           ``_staging/batch={batch_id}-{token}`` dir;
+           ``_staging/batch={batch_id}-{token}`` dir and fold the batch's
+           schema into the table's schema record (a column type conflict
+           raises here, before the commit);
         3. commit: create the marker ``{"rows", "writer": token}`` with
            :func:`_put_if_absent`. Exactly one writer of a batch id wins;
            a loser deletes its staging dir and returns False;
@@ -905,12 +923,11 @@ class PartitionedTable:
             fs.delete(Path(staging), True)
             return False
         rows = int(obs.get.get("rows", 0))
-        if rows:
-            self._record_partition_schema(df)
-        else:
+        if not rows:
             # a flat empty write still leaves a schema-only parquet file,
             # which must not roll into the table under the 0-row commit
             fs.delete(Path(staging), True)
+        self._fold_schema(df.schema)
         tmp = marker.suffix(f".tmp-{token}")
         out = fs.create(tmp, True)
         try:
@@ -1516,22 +1533,18 @@ class PartitionedTable:
 
     # -- reads -------------------------------------------------------------
 
-    def read(self, predicate: str | None = None, merge_schema: bool = False) -> DataFrame:
+    def read(self, predicate: str | None = None) -> DataFrame:
         """Partition-pruned read (reference delta_io.py:118-129). Catalyst
         prunes partitions and pushes data filters into the parquet scan
         automatically from the ``where`` — no manual filter plumbing.
 
-        ``merge_schema=True`` unions the schemas of every file (Delta
-        schema-evolution read parity): columns added by later appends
-        surface as nulls on old rows. Off by default — merging reads
-        every file footer, a real metadata cost at 100 TB; evolved
-        tables should record their current schema in a catalog instead.
+        The table loads with its recorded schema (see "table schema"
+        above): partition columns keep their written types, columns
+        added by later writes read as nulls on older rows (Delta
+        schema-evolution read parity), and building the DataFrame reads
+        no file footer and fires no Spark job.
         """
-        reader = self.spark.read.format(self.fmt)
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        with _string_partitions(self.spark):
-            df = self._restore_partition_types(reader.load(self.path))
+        df = self._read_files([self.path])
         if predicate is not None:
             df = df.where(predicate)
         return df
@@ -1726,8 +1739,8 @@ class PartitionedTable:
         collapses ``read_as_of`` (same contract as Delta OPTIMIZE +
         VACUUM of old versions). Batches whose marker recorded 0 rows
         never had files and roll back by marker deletion alone. Like
-        Delta RESTORE, table metadata recorded by later batches (the
-        evolved partition-schema hint) is not rolled back."""
+        Delta RESTORE, table metadata recorded by later batches (columns
+        they added to the schema record) is not rolled back."""
         committed = set(self.committed_batches())
         if not any(b <= batch_id for b in committed):
             raise ValueError(f"no committed batch <= {batch_id} at {self.path}")
@@ -1863,8 +1876,7 @@ class PartitionedTable:
         matches nothing because the column reads back as null, which
         made every maintenance pass over a null leaf see an empty
         partition (and overwrite_partitions then DROP it: data loss)."""
-        with _string_partitions(self.spark):
-            df = self._restore_partition_types(self.spark.read.format(self.fmt).load(self.path))
+        df = self.read()
         for k, v in partition_values.items():
             if v == HIVE_NULL_PARTITION:
                 df = df.where(F.col(k).isNull())
@@ -1992,9 +2004,9 @@ class DeletionVectors:
     def _has_dv_rows(self) -> bool:
         """True iff any committed DV batch wrote rows. An EMPTY
         mark_deleted commits a 0-row marker (the S7 skip, so its replay
-        is suppressed) but leaves no data file — scanning the sidecar
-        then would fail on schema inference, so this gate reads marker
-        METADATA only.
+        is suppressed) but leaves no data file — there is nothing to
+        subtract, so this gate reads marker METADATA only and lets
+        :meth:`read` skip the anti-join.
 
         A marker that parses to ``{}`` (torn/unreadable metrics — a
         foreign writer's in-place marker write, never this writer's own
@@ -2009,9 +2021,8 @@ class DeletionVectors:
         state (marker existence is the commit bit), so
         ``sidecar.read()`` includes its keys regardless of the metrics.
         Only an unreadable LIVE marker with no readable rows-bearing
-        sibling fails loud (the sidecar scan could otherwise die on
-        schema inference, or the batch's keys silently skip the
-        anti-join). Explicit ``rows: 0`` markers stay on the fast
+        sibling fails loud (the batch's keys would otherwise silently
+        skip the anti-join). Explicit ``rows: 0`` markers stay on the fast
         path."""
         applied = self.applied_through()
         any_rows = False
@@ -2085,56 +2096,36 @@ class DeletionVectors:
         # O(partitions)-metadata claim made true, and a crashed writer's
         # uncommitted partials never get baked into the rewrite
         live = self.table._live_data_files()
-        if self.table.partition_cols:
-            # ONE batched rewrite for every leaf (r16, guide §5/§6): a
-            # single anti-join + staging write + intent marker replaces
-            # a full overwrite protocol round PER leaf (profiled: the
-            # per-leaf loop was ~70% of q_deletion_vectors' wall, almost
-            # all driver-side job/marker/rename round-trips). Leaves
-            # whose rows all rewrote away are dropped in the same
-            # transaction via _replace_leaves; crash recovery is the
-            # same marker-driven roll-forward, now covering every leaf
-            # under one marker.
-            leaves = sorted(leaf for leaf in live if leaf)
-            files = [f for leaf in leaves for f in live[leaf]]
-            if not files:
-                return 0
-            clean = self.table._read_files(files).join(dead, self.key_col, "left_anti")
-            self.table.overwrite_partitions(
-                clean,
-                _validate=False,
-                _dv_purge=True,
-                _purge_through=through,
-                _consumed={
-                    leaf: [f.rsplit("/", 1)[-1] for f in live[leaf]]
-                    for leaf in leaves
-                },
-                _replace_leaves=leaves,
-            )
-            n = len(leaves)
-        else:
-            files = [f for fl in live.values() for f in fl]
-            if not files:
-                return 0
-            clean = self.table._read_files(files).join(dead, self.key_col, "left_anti")
-            if not self.table.overwrite_partitions(
-                clean,
-                _validate=False,
-                _dv_purge=True,
-                _purge_through=through,
-                _consumed={"": [f.rsplit("/", 1)[-1] for f in files]},
-            ):
-                # unpartitioned base whose rows are ALL deleted:
-                # overwrite_partitions cannot express "replace the whole
-                # table with empty" (the empty-commit guard no-ops it),
-                # so no rewrite ran — advancing the watermark here would
-                # retire the tombstones and RESURRECT every deleted row
-                # (r14 review pass 4). Keep them live: reads stay correct
-                # through the anti-join; the purge just reports 0.
-                return 0
-            n = 1
+        files = [f for fl in live.values() for f in fl]
+        if not files:
+            return 0
+        clean = self.table._read_files(files).join(dead, self.key_col, "left_anti")
+        # ONE batched rewrite for every leaf (r16, guide §5/§6): a single
+        # anti-join + staging write + intent marker replaces a full
+        # overwrite protocol round PER leaf (profiled: the per-leaf loop
+        # was ~70% of q_deletion_vectors' wall, almost all driver-side
+        # job/marker/rename round-trips). Leaves whose rows all rewrote
+        # away are dropped in the same transaction via _replace_leaves;
+        # an unpartitioned base is the single leaf "" and swaps whole.
+        wrote = self.table.overwrite_partitions(
+            clean,
+            _validate=False,
+            _dv_purge=True,
+            _purge_through=through,
+            _consumed={leaf: [f.rsplit("/", 1)[-1] for f in fl] for leaf, fl in live.items()},
+            _replace_leaves=sorted(live) if self.table.partition_cols else None,
+        )
+        if not wrote and not self.table.partition_cols:
+            # unpartitioned base whose rows are ALL deleted:
+            # overwrite_partitions cannot express "replace the whole
+            # table with empty" (the empty-commit guard no-ops it),
+            # so no rewrite ran — advancing the watermark here would
+            # retire the tombstones and RESURRECT every deleted row
+            # (r14 review pass 4). Keep them live: reads stay correct
+            # through the anti-join; the purge just reports 0.
+            return 0
         self._advance_watermark(through)
-        return n
+        return len(live)
 
 
 def change_feed(

@@ -2,7 +2,8 @@
 selection: one ``compact()``, one refresh-style ``overwrite_partitions``
 and one deletion-vector ``purge()``, each killed right after writing its
 intent marker, then ``recover()`` — rows and history floor must land
-exactly where the uncrashed call would have put them. The full crash
+exactly where the uncrashed call would have put them. A last case reads
+the change feed across such a recovered purge. The full crash
 matrices (slow) live in test_compaction_crash, test_overwrite_crash,
 test_maintenance_crash and test_history_floor.
 """
@@ -13,7 +14,11 @@ import os
 
 import pytest
 
-from incremental_dagster_delta_spark.tableio import DeletionVectors, PartitionedTable
+from incremental_dagster_delta_spark.tableio import (
+    DeletionVectors,
+    PartitionedTable,
+    change_feed,
+)
 
 SCHEMA = "k long, v string, day string"
 D1, D2 = "2024-01-01", "2024-01-02"
@@ -75,3 +80,20 @@ def test_purge_crash_recovers(spark, tmp_path, monkeypatch):
     assert dv.purge() == 2  # re-run re-advances the watermark
     assert dv.applied_through() == 3
     assert _keys(dv.read()) == [11, 20]
+
+
+def test_change_feed_across_recovered_purge(spark, tmp_path, monkeypatch):
+    t = _table(spark, tmp_path / "t")
+    dv = DeletionVectors(t, "k")
+    dv.mark_deleted(spark.createDataFrame([(10,), (21,)], "k long"), 3)
+    _crash_after_marker(monkeypatch, t, dv.purge)
+    t.append_batch(spark.createDataFrame([(40, "c", D1), (41, "d", D2)], SCHEMA), 4)
+    # delete version 3 is baked into the files while the watermark
+    # advance was lost: its rows cannot be reconstructed
+    with pytest.raises(ValueError, match="purge_through=3"):
+        change_feed(t, dv, 2, 4)
+    feed = change_feed(t, dv, 3, 4).collect()
+    assert sorted((r["k"], r["_change_type"], r["_commit_version"]) for r in feed) == [
+        (40, "insert", 4),
+        (41, "insert", 4),
+    ]

@@ -9,12 +9,6 @@ import os
 
 from incremental_dagster_delta_spark.tableio import PartitionedTable
 
-import pytest
-
-# Excluded from the default run so `pytest tests/` fits the driver's
-# verify budget (pyproject addopts); scripts/partest.py runs it.
-pytestmark = pytest.mark.slow
-
 SCHEMA = "k long, payload string, day string"
 
 
