@@ -110,8 +110,9 @@ def main() -> None:
     # Session shuffle partitions stay at the cluster-shaped 2×cores
     # default: CPU-bound aggregations over the fact tables want the full
     # core count. The corpus-join family (narrow-row self-joins whose
-    # per-task constants dominate at test SFs) scopes its OWN partition
-    # count from input bytes via tables.sized_shuffle — a global
+    # per-task constants dominate at test SFs) declares @query(size_from=)
+    # and runs under the scoped execution policy (tables.sized_shuffle:
+    # partition count from input bytes, AQE off at its floor) — a global
     # data-sized default was measured to win there but cost the lineitem
     # queries 0.2-0.5 s each, a net loss.
     orig_sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -159,7 +159,7 @@ def learn_bpe(spark, docs, n: int = N_MERGES):
     return merges, cur
 
 
-@query("q_bpe_merges", tags=("text", "llm"), oracle=_oracle())
+@query("q_bpe_merges", tags=("text", "llm"), oracle=_oracle(), size_from="documents")
 def q_bpe_merges(spark, sf_dir):
     """Learn the first N_MERGES BPE merges over the documents corpus.
 
@@ -286,7 +286,7 @@ def encode_bpe(docs, seg):
     )
 
 
-@query("q_bpe_encode", tags=("text", "llm"), oracle=_encode_oracle())
+@query("q_bpe_encode", tags=("text", "llm"), oracle=_encode_oracle(), size_from="documents")
 def q_bpe_encode(spark, sf_dir):
     """Encode the corpus with the learned BPE vocab: per document, the
     BPE token count, the character-level symbol count (chars + one
@@ -336,7 +336,12 @@ def fertility_by_lang(docs, seg: "DataFrame", tokens_alias: str = "n_bpe_tokens"
     )
 
 
-@query("q_tokenizer_fertility", tags=("text", "llm"), oracle=_fertility_oracle())
+@query(
+    "q_tokenizer_fertility",
+    tags=("text", "llm"),
+    oracle=_fertility_oracle(),
+    size_from="documents",
+)
 def q_tokenizer_fertility(spark, sf_dir):
     """Per-language tokenizer fertility under the learned BPE vocab:
     BPE tokens per word (and mean word length) grouped by document

@@ -310,7 +310,12 @@ def q_ngram_jaccard(spark, sf_dir):
     return ngram_jaccard_pairs(spark, t(spark, sf_dir, "documents"), cache_key=sf_dir)
 
 
-@query("q_ngram_jaccard_prefix", tags=("dedup", "llm"), oracle=_PAIRS_ORACLE)
+@query(
+    "q_ngram_jaccard_prefix",
+    tags=("dedup", "llm"),
+    oracle=_PAIRS_ORACLE,
+    size_from="documents",
+)
 def q_ngram_jaccard_prefix(spark, sf_dir):
     """PPJoin-style prefix-filtered variant of q_ngram_jaccard: only each
     document's rarest ⌈(1-t)·|S|⌉ + 1 shingles (under one global
@@ -446,7 +451,13 @@ def verify_jaccard(cand, sh_left, sh_right, lkey: str, rkey: str, threshold: flo
     )
 
 
-@query("q_dedup_minhash", tags=("dedup", "llm"), bench=True, oracle=_PAIRS_ORACLE)
+@query(
+    "q_dedup_minhash",
+    tags=("dedup", "llm"),
+    bench=True,
+    oracle=_PAIRS_ORACLE,
+    size_from="documents",
+)
 def q_dedup_minhash(spark, sf_dir):
     """MinHash-LSH near-dup detection, verified with exact Jaccard.
 
@@ -932,6 +943,7 @@ CONTAIN_OFFSET = 400000  # re-keyed truncated copies start here
 @query(
     "q_containment",
     tags=("dedup", "llm"),
+    size_from="documents",
     oracle=f"""
     WITH corpus AS (
       SELECT doc_id, text FROM documents
@@ -1243,7 +1255,7 @@ def substring_spans(
     return materialize_release(out, ps)
 
 
-@query("q_substring_dedup", tags=("dedup", "llm"), oracle=_SUBSTR_ORACLE)
+@query("q_substring_dedup", tags=("dedup", "llm"), oracle=_SUBSTR_ORACLE, size_from="documents")
 def q_substring_dedup(spark, sf_dir):
     """Exact substring (span) dedup: every maximal run of ≥
     SUBSTR_MIN_SPAN consecutive tokens shared verbatim across a document
@@ -1300,7 +1312,12 @@ _DUP_FRACTION_ORACLE = f"""
 """
 
 
-@query("q_dup_span_fraction", tags=("dedup", "llm"), oracle=_DUP_FRACTION_ORACLE)
+@query(
+    "q_dup_span_fraction",
+    tags=("dedup", "llm"),
+    oracle=_DUP_FRACTION_ORACLE,
+    size_from="documents",
+)
 def q_dup_span_fraction(spark, sf_dir):
     """Per-document duplicated-token fraction: the share of each
     document's tokens covered by ANY cross-document duplicated span

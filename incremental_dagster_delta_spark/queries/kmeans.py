@@ -285,11 +285,11 @@ def _prepared_vec(e: DataFrame) -> DataFrame:
     single-file parquet is ONE split, serializing every assignment onto
     one core). Targeting ``spark.sql.shuffle.partitions`` rather than a
     fixed fan_out multiple matters here because the training loop is
-    ~25 tiny stages: the qid wraps itself in ``tables.sized_shuffle``
-    (registry _SIZED_SHUFFLE), so at gate scale the count is sized from
-    the table's on-disk bytes (≈8 tasks/stage, not 64 — the per-task
-    constant costs dominate sub-GB rounds), while a 100 TB scan is
-    already well-split and this is a no-op."""
+    ~25 tiny stages: the qid declares ``size_from="embeddings"`` and
+    runs inside ``tables.sized_shuffle``, so at gate scale the count is
+    sized from the table's on-disk bytes (≈8 tasks/stage, not 64 — the
+    per-task constant costs dominate sub-GB rounds), while a 100 TB scan
+    is already well-split and this is a no-op."""
     spark = e.sparkSession
     vec = quantize_embeddings(e)
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -477,6 +477,7 @@ def _ivf_trained_oracle(
 @query(
     "q_cosine_ann_ivf_trained",
     tags=("similarity", "llm", "trained"),
+    size_from="embeddings",
     oracle=_ivf_trained_oracle(),
 )
 def q_cosine_ann_ivf_trained(spark, sf_dir):
@@ -512,6 +513,7 @@ IVF_INC_MOD = 4  # vec_id % 4 == 0 → the new ingest batch; else corpus
 @query(
     "q_ivf_incremental",
     tags=("similarity", "llm", "incremental", "trained"),
+    size_from="embeddings",
     # the trained-IVF oracle with the training set restricted to the
     # corpus split (the batch must not influence the frozen centroids);
     # its assignment CTE always covers the full union — the REBUILD the
@@ -560,9 +562,11 @@ def q_ivf_incremental(spark, sf_dir):
     return ivf_topk(e, cents, assigned=postings, extra_cols=("from_batch",))
 
 
+# The Lloyd's loop is ~25 tiny stages; see _prepared_vec for its split.
 @query(
     "q_kmeans_centroids",
     tags=("similarity", "llm", "trained"),
+    size_from="embeddings",
     bench=True,  # r9: the trained-ANN family's headline representative
     oracle=_km_oracle(),
 )
@@ -650,6 +654,7 @@ def _km_minibatch_oracle() -> str:
 @query(
     "q_kmeans_minibatch",
     tags=("similarity", "llm", "trained", "incremental"),
+    size_from="embeddings",
     oracle=_km_minibatch_oracle(),
 )
 def q_kmeans_minibatch(spark, sf_dir):
@@ -885,7 +890,12 @@ def _pq_oracle(rounds: int = KM_ROUNDS) -> str:
     return "".join(parts)
 
 
-@query("q_pq_train", tags=("similarity", "llm", "trained"), oracle=_pq_oracle())
+@query(
+    "q_pq_train",
+    tags=("similarity", "llm", "trained"),
+    oracle=_pq_oracle(),
+    size_from="embeddings",
+)
 def q_pq_train(spark, sf_dir):
     """Train the product-quantization codebooks (per-subspace Lloyd's,
     the actual Jégou et al. 2011 training the stride codebook of
@@ -1048,6 +1058,7 @@ def _maximin_oracle(k: int = KMM_K) -> str:
 @query(
     "q_kmeans_maximin",
     tags=("similarity", "llm", "trained"),
+    size_from="embeddings",
     oracle=_maximin_oracle(),
 )
 def q_kmeans_maximin(spark, sf_dir):

@@ -67,7 +67,8 @@ GROUP BY doc_id
 """
 
 
-@query("q_bigram_perplexity", tags=("text", "llm"), oracle=_PPL_ORACLE)
+# The persisted bigram stream keeps the partition count it was planned with.
+@query("q_bigram_perplexity", tags=("text", "llm"), oracle=_PPL_ORACLE, size_from="documents")
 def q_bigram_perplexity(spark, sf_dir):
     """Per-document cross-entropy under an add-one-smoothed bigram LM
     trained on the corpus itself — the perplexity-filtering signal
@@ -211,7 +212,7 @@ GROUP BY doc_id
 """
 
 
-@query("q_kn_perplexity", tags=("text", "llm"), oracle=_KN_ORACLE)
+@query("q_kn_perplexity", tags=("text", "llm"), oracle=_KN_ORACLE, size_from="documents")
 def q_kn_perplexity(spark, sf_dir):
     """Per-document cross-entropy under an interpolated Kneser-Ney
     bigram LM (Kneser & Ney 1995; the smoothing KenLM ships and CCNet's
@@ -312,6 +313,7 @@ _CCNET_T2 = 2.0 / 3.0
 @query(
     "q_ccnet_buckets",
     tags=("curation", "llm", "trained"),
+    size_from="documents",
     oracle=f"""
     WITH ce AS ({_KN_ORACLE}),
     terc AS (

@@ -231,7 +231,13 @@ _CMS_ORACLE = f"""
     """
 
 
-@query("q_cms_heavy_hitters", tags=("sketch", "llm"), bench=True, oracle=_CMS_ORACLE)
+@query(
+    "q_cms_heavy_hitters",
+    tags=("sketch", "llm"),
+    bench=True,
+    oracle=_CMS_ORACLE,
+    size_from="documents",
+)
 def q_cms_heavy_hitters(spark, sf_dir):
     """Count-min sketch (Cormode & Muthukrishnan 2005) over document
     tokens, reported next to exact counts for the top-N heavy hitters.
@@ -283,7 +289,7 @@ def q_cms_heavy_hitters(spark, sf_dir):
         F.col("cms_estimate").cast("long"),
         (F.col("cms_estimate") - F.col("exact_cnt")).cast("long").alias("overestimate"),
     )
-    # Materialize inside the call so the registry's sized_shuffle scope
+    # Materialize inside the call so the size_from="documents" scope
     # applies to the token-explode shuffles (A/B at sf0.1: 2.23 → 1.07 s
     # median-of-5 — the exploded-documents family's usual win).
     from incremental_dagster_delta_spark.tables import materialize_release

@@ -7,15 +7,18 @@ Scale shape — the corpus pays exactly ONE tokenize + word-count pass
 (map-side-combinable groupBy), identical to ``bpe.learn_bpe``; every EM
 iteration runs on the |distinct words| table. The E-step is the
 Spark-first part: Viterbi over a word is a *single projection
-expression* — ``F.aggregate`` over character positions with an
+expression* — ``aggregate`` over character positions with an
 accumulator array of (score, seg) structs and the piece scores inlined
-as a ``create_map`` literal (the vocab is bounded: |seed| ≈ 100 pieces,
+as one ``map(...)`` literal (the vocab is bounded: |seed| ≈ 100 pieces,
 so collecting its counts to the driver is the same legitimate
-vocab-bounded scalar as BPE's merge argmax). No joins, no shuffle, no
-Python — the whole DP stays inside whole-stage codegen (pinned by
-tests/test_plans.py). The M-step is one |V|-bounded shuffle
-(explode + groupBy-sum). At 100 TB the corpus pass dominates and
-everything downstream is vocab-sized.
+vocab-bounded scalar as BPE's merge argmax). The driver writes that
+expression as SQL text and parses it with one ``F.expr`` call per EM
+round, so building it costs O(1) py4j round trips, not one per column
+operation and map entry. No joins, no shuffle, no Python — the whole
+DP stays inside whole-stage codegen (pinned by tests/test_plans.py).
+The M-step is one |V|-bounded shuffle (explode + groupBy-sum). At
+100 TB the corpus pass dominates and everything downstream is
+vocab-sized.
 
 Determinism — the DP compares INTEGER-scaled log-probs
 (``floor(ln(cnt/total)·1e6 + 0.5)`` as BIGINT): integer sums are exact
@@ -119,56 +122,57 @@ def seed_counts(words: DataFrame) -> DataFrame:
     return chars.unionAll(multi)
 
 
+def _sql_str(text: str) -> str:
+    """``text`` as a Spark SQL string literal that needs no escaping rules:
+    its UTF-8 bytes in hex, cast back to STRING (quotes, backslashes and
+    multibyte characters round-trip unchanged)."""
+    return f"CAST(X'{text.encode().hex()}' AS STRING)"
+
+
 def viterbi_seg(word_col, scores: dict[str, int]):
     """Best-segmentation column: the whole Viterbi DP as one expression.
 
-    ``F.aggregate`` folds character positions 1..len(word); the
+    ``aggregate`` folds character positions 1..len(word); the
     accumulator is the dp array of (score, seg) structs (dp[0] = (0,'')).
     At position i the candidates are the ≤ MAX_PIECE_LEN pieces ending
     at i whose text is in the score map; the best is chosen by
     (score desc, seg asc) with an explicit fold comparator, so the
     result is order-of-evaluation independent and bit-identical to the
-    oracle's row_number tiebreak."""
-    m = F.create_map(
-        *[x for p in sorted(scores) for x in (F.lit(p), F.lit(scores[p]))]
-    )
-    worst = F.struct(
-        F.lit(-(1 << 62)).cast("long").alias("score"), F.lit("").alias("seg")
-    )
+    oracle's row_number tiebreak.
 
-    def step(acc, i):
-        def cand(plen):
-            j = i - F.lit(plen)
-            piece = F.substr(word_col, j + F.lit(1), F.lit(plen))
-            # clamped index is only read when j >= 0 (the when-guard)
-            prev = F.element_at(acc, F.greatest(j + F.lit(1), F.lit(1)))
-            sc = F.try_element_at(m, piece)
-            return F.when(
-                (j >= F.lit(0)) & sc.isNotNull(),
-                F.struct(
-                    (prev["score"] + sc).alias("score"),
-                    F.concat(prev["seg"], piece, F.lit(SEP)).alias("seg"),
-                ),
-            )
-        cands = F.filter(
-            F.array(*[cand(p) for p in range(1, MAX_PIECE_LEN + 1)]),
-            lambda c: c.isNotNull(),
-        )
-        best = F.aggregate(
-            cands,
-            worst,
-            lambda b, c: F.when(
-                (c["score"] > b["score"])
-                | ((c["score"] == b["score"]) & (c["seg"] < b["seg"])),
-                c,
-            ).otherwise(b),
-        )
-        return F.concat(acc, F.array(best))
+    The expression is written as SQL text and parsed by ONE ``F.expr``
+    call: assembled from ``F.*`` calls, each column operation and each
+    of the ~200 score-map literals was its own py4j round trip (~2,000
+    per EM round). ``word_col`` enters by its SQL text, which for a
+    plain column reference is its name."""
+    w = word_col._jc.toString()
+    m = "map(" + ", ".join(f"{_sql_str(p)}, {scores[p]}" for p in sorted(scores)) + ")"
+    sep = _sql_str(SEP)
 
-    n = F.length(word_col)
-    init = F.array(F.struct(F.lit(0).cast("long").alias("score"), F.lit("").alias("seg")))
-    dp = F.aggregate(F.sequence(F.lit(1), n), init, step)
-    return F.element_at(dp, n + F.lit(1))["seg"]
+    def cand(plen: int) -> str:
+        j = f"(_i - {plen})"
+        piece = f"substr({w}, {j} + 1, {plen})"
+        # clamped index is only read when j >= 0 (the CASE guard)
+        prev = f"element_at(_acc, greatest({j} + 1, 1))"
+        sc = f"try_element_at({m}, {piece})"
+        return (
+            f"CASE WHEN {j} >= 0 AND {sc} IS NOT NULL THEN named_struct("
+            f"'score', {prev}.score + {sc}, 'seg', concat({prev}.seg, {piece}, {sep})) END"
+        )
+
+    cands = ", ".join(cand(p) for p in range(1, MAX_PIECE_LEN + 1))
+    best = (
+        f"aggregate(filter(array({cands}), _c -> _c IS NOT NULL), "
+        f"named_struct('score', CAST({-(1 << 62)} AS BIGINT), 'seg', ''), "
+        "(_b, _c) -> CASE WHEN _c.score > _b.score "
+        "OR (_c.score = _b.score AND _c.seg < _b.seg) THEN _c ELSE _b END)"
+    )
+    dp = (
+        f"aggregate(sequence(1, length({w})), "
+        "array(named_struct('score', CAST(0 AS BIGINT), 'seg', '')), "
+        f"(_acc, _i) -> concat(_acc, array({best})))"
+    )
+    return F.expr(f"element_at({dp}, length({w}) + 1).seg")
 
 
 def train_unigram(spark, docs: DataFrame):
@@ -338,7 +342,15 @@ def _unigram_fertility_oracle() -> str:
     )
 
 
-@query("q_unigram_lm", tags=("text", "llm"), oracle=_unigram_oracle(), bench=True)
+# EM rounds run driver jobs over the persisted word table, which keeps the
+# partition count it was planned with (AQE never re-coalesces a cache).
+@query(
+    "q_unigram_lm",
+    tags=("text", "llm"),
+    oracle=_unigram_oracle(),
+    bench=True,
+    size_from="documents",
+)
 def q_unigram_lm(spark, sf_dir):
     """Train the unigram-LM tokenizer over the documents corpus and
     report the final vocabulary: the top TOP_K pieces by Viterbi usage
@@ -359,7 +371,12 @@ def q_unigram_lm(spark, sf_dir):
     return materialize_release(out, words)
 
 
-@query("q_unigram_fertility", tags=("text", "llm"), oracle=_unigram_fertility_oracle())
+@query(
+    "q_unigram_fertility",
+    tags=("text", "llm"),
+    oracle=_unigram_fertility_oracle(),
+    size_from="documents",
+)
 def q_unigram_fertility(spark, sf_dir):
     """Per-language fertility under the trained unigram-LM vocab — the
     same coverage-fairness metric as q_tokenizer_fertility but against
@@ -437,7 +454,12 @@ def encode_unigram(docs, seg):
     )
 
 
-@query("q_unigram_encode", tags=("text", "llm"), oracle=_unigram_encode_oracle())
+@query(
+    "q_unigram_encode",
+    tags=("text", "llm"),
+    oracle=_unigram_encode_oracle(),
+    size_from="documents",
+)
 def q_unigram_encode(spark, sf_dir):
     """Encode the corpus with the trained unigram-LM vocab: per document
     the Viterbi token count, character count, and compression ratio —

@@ -97,6 +97,14 @@ class CheckConstraintViolation(RuntimeError):
 HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
+def _fs_class(jvm, name: str):
+    """The class ``org.apache.hadoop.fs.<name>`` in one py4j call. A
+    dotted ``jvm.org.apache.hadoop.fs.X`` chain resolves each package
+    segment in its own round trip through a failed class lookup (~3.7 ms
+    per chain, against ~0.1 ms for the fully qualified name)."""
+    return getattr(jvm, f"org.apache.hadoop.fs.{name}")
+
+
 def _visible_files(fs, root):
     """Yield the Hadoop ``FileStatus`` of every file under ``root``,
     never descending into or yielding a ``_``/``.``-prefixed entry —
@@ -222,10 +230,10 @@ def _put_if_absent(fs, tmp, dst) -> bool:
                 return False
             return True
         jvm = SparkContext._jvm
-        Rename = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
+        Rename = _fs_class(jvm, "Options$Rename")
         opts = SparkContext._gateway.new_array(Rename, 1)
         opts[0] = Rename.NONE
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri(), fs.getConf())
+        fc = _fs_class(jvm, "FileContext").getFileContext(fs.getUri(), fs.getConf())
         try:
             fc.rename(src, dst, opts)
         except Py4JJavaError as e:
@@ -418,8 +426,7 @@ class PartitionedTable:
             # re-validate). Underscore-prefixed so it can never shadow a
             # partition column in **scope — the layout reserves _ names.
             self._validate_constraints(df)
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         self._recover_overwrite(fs, Path)  # converge any earlier crash first
         staging = self._overwrite_staging_path()
@@ -708,8 +715,7 @@ class PartitionedTable:
 
     def check_constraints(self) -> dict[str, str]:
         """Active named CHECK predicates (empty dict when none)."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         p = self._constraints_path(Path)
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if not fs.exists(p):
@@ -722,8 +728,7 @@ class PartitionedTable:
         return json.loads(raw)
 
     def _write_constraints(self, cons: dict[str, str]) -> None:
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         p = self._constraints_path(Path)
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
         tmp = Path(str(p) + f".tmp-{uuid.uuid4().hex}")
@@ -741,8 +746,7 @@ class PartitionedTable:
         constraint the current rows already violate is refused, so a
         registered constraint always means "every row ever served
         passed it"."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         if fs.exists(Path(self.path)):
             try:
@@ -802,8 +806,7 @@ class PartitionedTable:
         readable ``_schema.json`` entry, ``.tmp-*`` leftovers included
         (the :func:`_sidecar_replace` crash contract), data fields first,
         then ``partition_cols``. None when the root holds no record."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         fields: dict[str, StructField] = {}
         for doc in _sidecar_entries(fs, Path, self._schema_path()):
@@ -825,8 +828,7 @@ class PartitionedTable:
         replace may delete this one's tmp file or overwrite its result.
         Raises ValueError when a field's type differs from the recorded
         one."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         for attempt in range(5):
             cur = self._schema()
@@ -894,8 +896,7 @@ class PartitionedTable:
         committed but partly visible until a replay (step 1) or
         ``recover()`` completes the idempotent roll-forward.
         """
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         marker = Path(posixpath.join(self.path, "_commits", str(batch_id)))
         if fs.exists(marker):
@@ -997,8 +998,7 @@ class PartitionedTable:
     def batch_metrics(self) -> dict[int, dict]:
         """Commit metrics per batch id (rows written), read back from the
         marker contents; markers from older writers parse as ``{}``."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         commits = Path(posixpath.join(self.path, "_commits"))
         fs = commits.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if not fs.exists(commits):
@@ -1063,8 +1063,7 @@ class PartitionedTable:
         added dimension halves per-dimension resolution — past ~4
         columns prefer picking the two that queries actually filter on.
         """
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         # a pending overwrite marker means a leaf is mid-swap (possibly
@@ -1174,8 +1173,7 @@ class PartitionedTable:
         # index: a pending overwrite plan would otherwise yield wrong
         # counts (or replay mid-rewrite, after a leaf load already
         # captured its file list)
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         self._recover_overwrite(fs, Path)
         rewritten = 0
@@ -1268,8 +1266,7 @@ class PartitionedTable:
         silently emit zero delete rows. ``None`` on legacy docs / non-
         purge claims. Ties at the same floor keep the HIGHEST through
         (the most conservative: more versions refuse loudly)."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         best, best_exact, best_purge = -1, True, True
         best_through: int | None = None
@@ -1362,8 +1359,7 @@ class PartitionedTable:
             ):
                 return  # nothing weakens: idempotent replay / no-op
             new_exact, new_purge, new_through = want_exact, want_purge, want_through
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         doc = {"floor": int(floor), "exact": new_exact, "purge": new_purge}
         if new_through is not None:
@@ -1376,8 +1372,7 @@ class PartitionedTable:
         may have been interrupted. Staging dirs of committed batches are
         rolled forward; uncommitted ones may belong to a live writer and
         are left for ``vacuum()``."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         self._recover_overwrite(fs, Path)
         staging_root = Path(posixpath.join(self.path, "_staging"))
@@ -1481,8 +1476,7 @@ class PartitionedTable:
         }
         if not given:
             raise ValueError("delete_partitions needs at least one partition value")
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
         # converge pending crashed maintenance FIRST, like every other
         # maintenance entry point: computing victims over a half-swapped
@@ -1569,8 +1563,7 @@ class PartitionedTable:
         never diverge between read() maintenance and the exported
         snapshot (r14 review pass 5 — two hand-rolled copies of this
         filter had already needed coordinated fixes once)."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if not fs.exists(root):
@@ -1635,8 +1628,7 @@ class PartitionedTable:
         """Sorted ids of every batch with a commit marker — the table's
         version history (Delta's equivalent is the ``_delta_log`` entry
         list)."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         commits = Path(posixpath.join(self.path, "_commits"))
         fs = commits.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if not fs.exists(commits):
@@ -1692,8 +1684,7 @@ class PartitionedTable:
                 "reflect post-rewrite state. Only read() serves this table's "
                 "current state; snapshots strictly above the floor are exact."
             )
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         files = []
@@ -1761,8 +1752,7 @@ class PartitionedTable:
         victims = {b for b in committed if b > batch_id}
         if not victims:
             return 0
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         # inventory: which victim batches still have their prefixed files?
@@ -1825,8 +1815,7 @@ class PartitionedTable:
         Like Delta's VACUUM, the caller must not run it concurrently
         with an active writer on the same table (a writer mid-stage
         would lose its staging dir and fail; its replay re-stages)."""
-        jvm = self.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.spark._jvm, "Path")
         root = Path(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         # recovery FIRST, even when the root is missing: an unpartitioned
@@ -1890,8 +1879,7 @@ class PartitionedTable:
         file and runs no Spark job; a missing root, or one holding only
         hidden sidecar state (``_commits``, ``_delta_log``,
         ``_staging``), does not exist."""
-        jvm = self.spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        root = _fs_class(self.spark._jvm, "Path")(self.path)
         fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
         try:
             return next(_visible_files(fs, root), None) is not None
@@ -1973,8 +1961,7 @@ class DeletionVectors:
         0, so 0 cannot mean "nothing applied"). Unreadable/corrupt
         marker degrades to -1: every retained batch re-applies, a no-op
         anti-join on keys the purge already removed."""
-        jvm = self.table.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.table.spark._jvm, "Path")
         p = self._watermark_path(Path)
         fs = p.getFileSystem(self.table.spark._jsc.hadoopConfiguration())
         best = -1
@@ -1993,8 +1980,7 @@ class DeletionVectors:
         export() on 'unpurged deletion vectors')."""
         if int(through) <= self.applied_through():
             return
-        jvm = self.table.spark._jvm
-        Path = jvm.org.apache.hadoop.fs.Path
+        Path = _fs_class(self.table.spark._jvm, "Path")
         p = self._watermark_path(Path)
         fs = p.getFileSystem(self.table.spark._jsc.hadoopConfiguration())
         _sidecar_replace(fs, Path, str(p), {"through": int(through)})
@@ -2159,8 +2145,7 @@ def change_feed(
     rewrote the prefixed files) raises through ``read_as_of``'s
     contract rather than returning a silently partial feed."""
     spark = table.spark
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
+    Path = _fs_class(spark._jvm, "Path")
     root = Path(table.path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
 

@@ -72,7 +72,7 @@ _SCHEMAS: dict = {}
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = getattr(jvm, "org.apache.hadoop.fs.Path")(path)
     status = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).getFileStatus(hpath)
     key = (
         status.getPath().toString(),
@@ -308,28 +308,42 @@ def sized_shuffle(
     expansion: float = 4.0,
     per_partition_bytes: int = 32 << 20,
 ):
-    """Scope ``spark.sql.shuffle.partitions`` to the volume THIS query
-    will actually shuffle: ``expansion ×`` the input's on-disk bytes
-    (``df.inputFiles()``), one partition per ~32 MB, floored at a
-    quarter of the machine's parallelism.
+    """The scoped small-input execution policy. Inside the scope:
 
-    Rationale: a session-wide partition count can't fit every query. The
-    dedup/docsim family shuffles tens of MB at test scale factors —
-    across 64 session-default partitions that is ~0.5 MB/task, and the
-    per-task constant costs (sort-run setup, codegen init, commit) cost
-    more than the data (measured: the q_ngram_jaccard pair join runs
-    2.3× faster at 8 partitions than at 64 on sf0.1). The same formula
-    sized from a 100 TB input yields thousands of partitions — this is
-    the per-job shuffle sizing a cluster submit would configure, derived
-    from input stats instead of hard-coded. AQE can only coalesce DOWN
-    toward the machine's parallelism floor (``parallelismFirst``), so it
-    never reaches the size-optimal count for sub-GB shuffles, and
-    disabling ``parallelismFirst`` over-coalesces to one serial task.
+    - ``spark.sql.shuffle.partitions`` is sized to the volume THIS query
+      will actually shuffle: ``expansion ×`` the input's on-disk bytes
+      (``df.inputFiles()``), one partition per ~32 MB, floored at a
+      quarter of the machine's parallelism;
+    - AQE (``spark.sql.adaptive.enabled``) is off exactly when that count
+      sits at its floor, i.e. the estimated shuffle is at most
+      ``floor × per_partition_bytes``.
 
-    An UNKNOWN input size (see :func:`_input_bytes`) leaves the session
-    default alone rather than override with an under-count — pinning the
-    floor there would force a possibly-multi-GB shuffle into a handful
-    of partitions (r15 review).
+    Rationale for the count: a session-wide partition count can't fit
+    every query. The dedup/docsim family shuffles tens of MB at test
+    scale factors — across 64 session-default partitions that is
+    ~0.5 MB/task, and the per-task constant costs (sort-run setup,
+    codegen init, commit) cost more than the data (measured: the
+    q_ngram_jaccard pair join runs 2.3× faster at 8 partitions than at
+    64 on sf0.1). The same formula sized from a 100 TB input yields
+    thousands of partitions — this is the per-job shuffle sizing a
+    cluster submit would configure, derived from input stats instead of
+    hard-coded. AQE can only coalesce DOWN toward the machine's
+    parallelism floor (``parallelismFirst``), so it never reaches the
+    size-optimal count for sub-GB shuffles, and disabling
+    ``parallelismFirst`` over-coalesces to one serial task.
+
+    Rationale for AQE off at the floor: none of AQE's runtime rewrites
+    has anything to act on there. Coalescing would stop at the floor
+    anyway, and skew splitting starts at 256 MB per partition. What AQE
+    still does is submit every shuffle stage as its own Spark job,
+    ~74 ms each on a 4-vCPU host — the dominant cost of a small
+    iterative query. Above the floor AQE stays on, so its coalescing
+    and skew handling cover every input big enough to need them.
+
+    An UNKNOWN input size (see :func:`_input_bytes`) leaves both confs
+    alone rather than override with an under-count — pinning the floor
+    there would force a possibly-multi-GB shuffle into a handful of
+    partitions (r15 review) with AQE unable to split its skew.
     """
     byts = _input_bytes(df)
     if byts is None:
@@ -337,13 +351,17 @@ def sized_shuffle(
         return
     floor = max(2, spark.sparkContext.defaultParallelism // 4)
     n = max(floor, min(100_000, int(byts * expansion / per_partition_bytes) + 1))
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    confs = {"spark.sql.shuffle.partitions": str(n)}
+    if n == floor:
+        confs["spark.sql.adaptive.enabled"] = "false"
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 _EAGER_MATERIALIZE = True

@@ -4,7 +4,9 @@ Runs each named query once for warmup and once measured (noop sink, the
 bench methodology), with the Spark UI enabled, then pulls the REST API
 for per-stage executorRunTime / shuffle bytes so optimization targets
 the stage that actually costs time (guide §1.1/§7.1) instead of the one
-that looks expensive in the plan.
+that looks expensive in the plan. The measured run also reports its
+Spark job count (jobs per query is the key layer metric at small scale
+factors), counted through a job group and the status tracker.
 
 Usage: python scripts/profile_query.py q_doc_similarity [q_x ...]
 """
@@ -48,9 +50,14 @@ def main() -> None:
         spec = QUERIES[name]
         run(spec)  # warmup
         before = {s["stageId"] for s in stages()}
-        spark.sparkContext.setJobDescription(name)
-        wall = run(spec)
-        spark.sparkContext.setJobDescription(None)
+        sc = spark.sparkContext
+        group = f"profile-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            wall = run(spec)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         # poll until the stage set is stable instead of one fixed sleep
         prev_ids: set[int] = set()
         for _ in range(20):
@@ -60,11 +67,14 @@ def main() -> None:
                 break
             prev_ids = cur
         new = [s for s in stages() if s["stageId"] not in before]
-        incomplete = [s for s in new if s.get("status") != "COMPLETE"]
+        # a stage whose shuffle output an earlier job already wrote is
+        # SKIPPED: it ran no task and is not a stage still in flight
+        skipped = [s for s in new if s.get("status") == "SKIPPED"]
+        incomplete = [s for s in new if s.get("status") not in ("COMPLETE", "SKIPPED")]
         new.sort(key=lambda s: -s["executorRunTime"])
         tot_run = sum(s["executorRunTime"] for s in new)
-        print(f"\n== {name}: wall {wall:.2f}s, {len(new)} stages "
-              f"({len(incomplete)} not COMPLETE at poll), "
+        print(f"\n== {name}: wall {wall:.2f}s, {jobs} jobs, {len(new)} stages "
+              f"({len(skipped)} skipped, {len(incomplete)} not COMPLETE at poll), "
               f"executorRunTime total {tot_run/1e3:.2f}s")
         for s in new[:14]:
             nm = s["name"].split("\n")[0][:80]

@@ -58,6 +58,16 @@ def test_viterbi_seg_known_vocab(spark):
     dfx = spark.createDataFrame([("xy",)], "word string")
     r = dfx.select(viterbi_seg(F.col("word"), tie).alias("seg")).collect()[0]
     assert r["seg"] == f"x{SEP}y{SEP}"  # 'x␟y␟' < 'xy␟'
+    # pieces holding a quote, a backslash and multibyte characters reach
+    # the score map intact (the map is inlined as a SQL literal)
+    odd = {"'": -5, "\\": -6, "é": -4, "'\\": -9, "é'": -8, "日本": -3, "日": -2, "本": -2}
+    words = ["'\\é'", "日本'", "\\'é\\", "é'日本"]
+    dfo = spark.createDataFrame([(w,) for w in words], "word string")
+    got = {
+        r["word"]: r["seg"]
+        for r in dfo.select("word", viterbi_seg(F.col("word"), odd).alias("seg")).collect()
+    }
+    assert got == {w: _py_viterbi(w, odd) for w in words}
 
 
 def test_train_matches_python_em(spark, sf_dir):
