@@ -69,6 +69,7 @@ from incremental_dagster_delta_spark.tableio import (
     HIVE_NULL_PARTITION,
     DeletionVectors,
     PartitionedTable,
+    _leaf_values,
 )
 
 PROTOCOL_ACTION = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
@@ -116,18 +117,15 @@ def _live_files(table: PartitionedTable) -> dict[str, dict]:
     diverge from ``read()`` on what counts as table state (r14)."""
     out: dict[str, dict] = {}
     for rel, st in table._live_file_statuses():
-        pvals: dict[str, str | None] = {}
-        for seg in rel.split("/")[:-1]:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                val = urllib.parse.unquote(v)
-                # per spec a null partition value is JSON null in the
-                # string map, not hive's on-disk sentinel directory name
-                pvals[k] = None if val == HIVE_NULL_PARTITION else val
         out[rel] = {
             "size": int(st.getLen()),
             "modificationTime": int(st.getModificationTime()),
-            "partitionValues": pvals,
+            # per spec a null partition value is JSON null in the string
+            # map, not hive's on-disk sentinel directory name
+            "partitionValues": {
+                k: None if v == HIVE_NULL_PARTITION else v
+                for k, v in _leaf_values(posixpath.dirname(rel)).items()
+            },
         }
     return out
 

@@ -106,17 +106,17 @@ def _fs_class(jvm, name: str):
 
 
 def _visible_files(fs, root):
-    """Yield the Hadoop ``FileStatus`` of every file under ``root``,
-    never descending into or yielding a ``_``/``.``-prefixed entry —
-    Spark's scan semantics. Such entries are SIDECAR state
+    """Yield ``(root-relative path, FileStatus)`` of every file under
+    ``root``, never descending into or yielding a ``_``/``.``-prefixed
+    entry — Spark's scan semantics. Such entries are SIDECAR state
     (``_commits``, ``_staging``, the ``_dv`` deletion-vector table,
     ``_dv_applied``, ``_constraints.json``, the ``_schema.json`` record),
-    never base-table data, so every walk that inventories data files by
-    their ``b{id}-`` prefix uses this one: a nested sidecar's batch ids
-    are an INDEPENDENT sequence and must never be checked against (or
-    deleted under) the base table's committed set (ADVICE r11:
-    vacuum/restore/read_as_of/change_feed). Raises (Py4JJavaError)
-    when ``root`` does not exist.
+    never base-table data: a nested sidecar's batch ids are an
+    INDEPENDENT sequence and must never be checked against (or deleted
+    under) the base table's committed set (ADVICE r11). Raises
+    (Py4JJavaError) when ``root`` does not exist. The relative path is
+    built from the names the walk reads anyway, so a file costs three
+    py4j calls (path, name, directory test).
 
     Walks with ``listStatus``, not ``listFiles(root, True)``: without
     Hadoop native IO, ``listFiles`` builds a ``LocatedFileStatus`` per
@@ -125,13 +125,49 @@ def _visible_files(fs, root):
     for the caller to drop them. On one 45-entry ``processed`` table
     that was 184 forks and 347-510 ms; this walk forks none and takes
     47-75 ms."""
-    for st in fs.listStatus(root):
-        if st.getPath().getName().startswith(("_", ".")):
-            continue
-        if st.isDirectory():
-            yield from _visible_files(fs, st.getPath())
-        else:
-            yield st
+
+    def walk(d, prefix: str):
+        for st in fs.listStatus(d):
+            p = st.getPath()
+            name = p.getName()
+            if name.startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                yield from walk(p, f"{prefix}{name}/")
+            else:
+                yield prefix + name, st
+
+    return walk(root, "")
+
+
+def _batch_of(name: str) -> int | None:
+    """The batch id of a data file named ``b{id}-…`` — the name
+    :meth:`PartitionedTable._roll_forward` publishes a committed batch's
+    files under; None for an unprefixed file (a rewrite's output or an
+    unversioned append). The one parser of that prefix."""
+    head, dash, _ = name.partition("-")
+    return int(head[1:]) if dash and head[:1] == "b" and head[1:].isdigit() else None
+
+
+def _leaf_values(leaf: str) -> dict[str, str]:
+    """{col: value} of the hive ``col=value`` segments of a root-relative
+    leaf path, values unescaped (on disk ``day=a%3Ab`` holds ``'a:b'``);
+    segments without ``=`` are skipped. The one parser of leaf names."""
+    return {
+        k: urllib.parse.unquote(v)
+        for k, v in (seg.split("=", 1) for seg in leaf.split("/") if "=" in seg)
+    }
+
+
+def _data_files(fs, root):
+    """Yield ``(root-relative path, FileStatus, batch id or None)`` for
+    every data file under ``root`` — the table's one file inventory.
+    Every file set the table derives filters it: the live set, a
+    snapshot, restore's victims, vacuum's orphans, change-feed inserts
+    and a rewrite's salvage. Yields nothing when ``root`` is missing."""
+    if fs.exists(root):
+        for rel, st in _visible_files(fs, root):
+            yield rel, st, _batch_of(posixpath.basename(rel))
 
 
 def _salvage_hidden_root_entries(fs, Path, old_root: str, new_root: str) -> None:
@@ -190,26 +226,17 @@ def _salvage_unconsumed_data_files(
     preserving them would leak their rows into reads (the pinned
     partials-cleanup behavior). Idempotent: rename-if-absent per
     file, so crash replay converges."""
-    old = Path(old_root)
-    if not fs.exists(old):
-        return
     consumed_set = set(consumed)
-    old_path = old.toUri().getPath()
     # hidden entries ride _salvage_hidden_root_entries
-    for st in _visible_files(fs, old):
-        p = st.getPath()
-        rel = posixpath.relpath(p.toUri().getPath(), old_path)
+    for rel, st, bid in _data_files(fs, Path(old_root)):
         if rel in consumed_set:
             continue  # rewritten into the new tree already
-        name = p.getName()
-        if name.startswith("b") and "-" in name:
-            bid = name[1 : name.index("-")]
-            if bid.isdigit() and int(bid) not in committed:
-                continue  # uncommitted partial: replay republishes it
+        if bid is not None and bid not in committed:
+            continue  # uncommitted partial: replay republishes it
         dst = Path(posixpath.join(new_root, rel))
         if not fs.exists(dst):
             fs.mkdirs(dst.getParent())
-            fs.rename(p, dst)
+            fs.rename(st.getPath(), dst)
 
 
 def _put_if_absent(fs, tmp, dst) -> bool:
@@ -282,9 +309,10 @@ def _sidecar_entries(fs, Path, path: str) -> list[dict]:
 
 def _sidecar_replace(fs, Path, path: str, doc: dict) -> None:
     """Crash-safe replace of a tiny monotonic JSON sidecar (history
-    floor, purge watermark, table schema). Callers must only ever
-    advance the value — the trailing cleanup deletes stale tmp leftovers
-    on the grounds that their values are <= the one just written."""
+    floor, purge watermark, table schema, CHECK constraints). Callers
+    must only ever advance the value — the trailing cleanup deletes
+    stale tmp leftovers on the grounds that their values are <= the one
+    just written."""
     tmp = Path(path + f".tmp-{uuid.uuid4().hex}")
     out = fs.create(tmp, True)
     try:
@@ -331,6 +359,11 @@ class PartitionedTable:
         self.path = path
         self.partition_cols = list(partition_cols)
         self.fmt = fmt
+
+    def _fs(self):
+        """(Hadoop FileSystem of the table root, the ``Path`` class)."""
+        Path = _fs_class(self.spark._jvm, "Path")
+        return Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration()), Path
 
     # -- writes ------------------------------------------------------------
 
@@ -471,14 +504,7 @@ class PartitionedTable:
                 # hive-escaped (day=a%3Ab for 'a:b'), scopes are not —
                 # raw comparison silently skipped the drop, and purge()
                 # then advanced its watermark over rows still on disk
-                parts = {
-                    k: urllib.parse.unquote(val)
-                    for k, val in (
-                        seg.split("=", 1)
-                        for seg in leaf.split("/")
-                        if "=" in seg  # tolerate stray non-hive dirs
-                    )
-                }
+                parts = _leaf_values(leaf)
                 in_scope = bool(scope and parts) and all(
                     parts.get(k) == str(v) for k, v in scope.items()
                 )
@@ -710,35 +736,42 @@ class PartitionedTable:
     # (map-side combinable; at 100 TB it rides the same scan the write
     # itself needs).
 
-    def _constraints_path(self, Path):
-        return Path(posixpath.join(self.path, "_constraints.json"))
+    def _constraints_path(self) -> str:
+        return posixpath.join(self.path, "_constraints.json")
+
+    def _constraints_doc(self) -> tuple[int, dict[str, str]]:
+        """(seq, constraints) of the newest readable record, ``.tmp-*``
+        leftovers included (the :func:`_sidecar_replace` crash contract:
+        a crash between its delete and rename must not drop every
+        constraint). A bare map written before records carried ``seq``
+        reads as seq 0; no record is (-1, {})."""
+        fs, Path = self._fs()
+        best: tuple[int, dict[str, str]] = (-1, {})
+        for doc in _sidecar_entries(fs, Path, self._constraints_path()):
+            if not isinstance(doc, dict):
+                continue
+            if isinstance(doc.get("constraints"), dict) and isinstance(doc.get("seq"), int):
+                seq, cons = doc["seq"], doc["constraints"]
+            else:
+                seq, cons = 0, doc
+            if seq > best[0]:
+                best = (seq, cons)
+        return best
 
     def check_constraints(self) -> dict[str, str]:
         """Active named CHECK predicates (empty dict when none)."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        p = self._constraints_path(Path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            return {}
-        stream = fs.open(p)
-        try:
-            raw = bytes(stream.readAllBytes()).decode("utf-8")
-        finally:
-            stream.close()
-        return json.loads(raw)
+        return dict(self._constraints_doc()[1])
 
-    def _write_constraints(self, cons: dict[str, str]) -> None:
-        Path = _fs_class(self.spark._jvm, "Path")
-        p = self._constraints_path(Path)
-        fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        tmp = Path(str(p) + f".tmp-{uuid.uuid4().hex}")
-        out = fs.create(tmp, True)
-        try:
-            out.write(json.dumps(cons).encode("utf-8"))
-        finally:
-            out.close()
-        fs.delete(p, False)
-        fs.rename(tmp, p)
+    def _set_constraint(self, name: str, predicate_sql: str | None) -> None:
+        """Add ``name`` (drop it when ``predicate_sql`` is None) and
+        replace the record under the next ``seq``, so the value only
+        advances even when a drop shrinks the map."""
+        fs, Path = self._fs()
+        seq, cons = self._constraints_doc()
+        cons = {k: v for k, v in cons.items() if k != name}
+        if predicate_sql is not None:
+            cons[name] = predicate_sql
+        _sidecar_replace(fs, Path, self._constraints_path(), {"seq": seq + 1, "constraints": cons})
 
     def add_check_constraint(self, name: str, predicate_sql: str) -> None:
         """Register a named CHECK predicate. Like Delta's ADD
@@ -746,8 +779,7 @@ class PartitionedTable:
         constraint the current rows already violate is refused, so a
         registered constraint always means "every row ever served
         passed it"."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         if fs.exists(Path(self.path)):
             try:
                 existing = self.read()
@@ -755,14 +787,10 @@ class PartitionedTable:
                 existing = None
             if existing is not None:
                 self._validate_constraints(existing, {name: predicate_sql})
-        cons = self.check_constraints()
-        cons[name] = predicate_sql
-        self._write_constraints(cons)
+        self._set_constraint(name, predicate_sql)
 
     def drop_check_constraint(self, name: str) -> None:
-        cons = self.check_constraints()
-        cons.pop(name, None)
-        self._write_constraints(cons)
+        self._set_constraint(name, None)
 
     def _validate_constraints(self, df: DataFrame, cons: dict[str, str] | None = None) -> None:
         cons = self.check_constraints() if cons is None else cons
@@ -806,8 +834,7 @@ class PartitionedTable:
         readable ``_schema.json`` entry, ``.tmp-*`` leftovers included
         (the :func:`_sidecar_replace` crash contract), data fields first,
         then ``partition_cols``. None when the root holds no record."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         fields: dict[str, StructField] = {}
         for doc in _sidecar_entries(fs, Path, self._schema_path()):
             try:
@@ -828,8 +855,7 @@ class PartitionedTable:
         replace may delete this one's tmp file or overwrite its result.
         Raises ValueError when a field's type differs from the recorded
         one."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         for attempt in range(5):
             cur = self._schema()
             fields = {f.name: f for f in cur.fields} if cur is not None else {}
@@ -964,32 +990,29 @@ class PartitionedTable:
         dir, so nothing is published or deleted."""
         if writer is None:
             return
-        prefix = f"b{batch_id}-"
-        own = f"{prefix}{writer}-"
+        own = f"b{batch_id}-{writer}-"
         staging = Path(self._batch_staging_path(batch_id, writer))
         try:
-            staged = [st.getPath() for st in _visible_files(fs, staging)]
+            staged = list(_visible_files(fs, staging))
         except Py4JJavaError:
             if fs.exists(staging):
                 raise
             staged = []  # a concurrent roll-forward finished and removed it
-        staging_uri = staging.toUri().getPath()
         swept: set[str] = set()
-        for p in staged:
-            name = p.getName()
-            rel_dir = posixpath.dirname(posixpath.relpath(p.toUri().getPath(), staging_uri))
+        for rel, st in staged:
+            rel_dir, name = posixpath.split(rel)
             leaf = Path(posixpath.join(self.path, rel_dir))
             if rel_dir not in swept:
                 swept.add(rel_dir)
                 fs.mkdirs(leaf)
-                for st in fs.listStatus(leaf):
-                    q = st.getPath().getName()
-                    if q.startswith(prefix) and not q.startswith(own):
-                        fs.delete(st.getPath(), False)
+                for other in fs.listStatus(leaf):
+                    q = other.getPath().getName()
+                    if _batch_of(q) == batch_id and not q.startswith(own):
+                        fs.delete(other.getPath(), False)
             try:
-                fs.rename(p, Path(leaf, own + name))
+                fs.rename(st.getPath(), Path(leaf, own + name))
             except Py4JJavaError:
-                if fs.exists(p):
+                if fs.exists(st.getPath()):
                     raise
         pattern = posixpath.join(self.path, "_staging", f"batch={batch_id}-*")
         for st in fs.globStatus(Path(pattern)) or []:
@@ -1063,9 +1086,7 @@ class PartitionedTable:
         added dimension halves per-dimension resolution — past ~4
         columns prefer picking the two that queries actually filter on.
         """
-        Path = _fs_class(self.spark._jvm, "Path")
-        root = Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         # a pending overwrite marker means a leaf is mid-swap (possibly
         # renamed OUT of the table): compacting that state would publish
         # a table with the leaf missing
@@ -1140,7 +1161,7 @@ class PartitionedTable:
             # lands in ``n=3``) is dropped, fenced by its consumed files
             _replace_leaves=sorted(live_map) if self.partition_cols else None,
         )
-        return sum(1 for _ in _visible_files(fs, root))  # data files, not sidecars
+        return sum(1 for _ in _visible_files(fs, Path(self.path)))  # data files, not sidecars
 
     def compact_partitions(
         self,
@@ -1173,8 +1194,7 @@ class PartitionedTable:
         # index: a pending overwrite plan would otherwise yield wrong
         # counts (or replay mid-rewrite, after a leaf load already
         # captured its file list)
-        Path = _fs_class(self.spark._jvm, "Path")
-        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         self._recover_overwrite(fs, Path)
         rewritten = 0
         live = self._live_data_files()
@@ -1372,8 +1392,7 @@ class PartitionedTable:
         may have been interrupted. Staging dirs of committed batches are
         rolled forward; uncommitted ones may belong to a live writer and
         are left for ``vacuum()``."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         self._recover_overwrite(fs, Path)
         staging_root = Path(posixpath.join(self.path, "_staging"))
         if not fs.exists(staging_root):
@@ -1476,8 +1495,7 @@ class PartitionedTable:
         }
         if not given:
             raise ValueError("delete_partitions needs at least one partition value")
-        Path = _fs_class(self.spark._jvm, "Path")
-        fs = Path(self.path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         # converge pending crashed maintenance FIRST, like every other
         # maintenance entry point: computing victims over a half-swapped
         # table deletes the wrong files (a mid-swap leaf is absent from
@@ -1490,37 +1508,20 @@ class PartitionedTable:
             scope = dict(scope_t)
             if all(scope.get(k) == v for k, v in given.items()):
                 victims.add("/".join(leaf.split("/")[: deepest + 1]))
-        committed = set(self.committed_batches())
-
-        def _erases_snapshot_file(rel: str) -> bool:
-            # a victim collapses history iff it holds a file read_as_of
-            # would include in some snapshot: a committed batch's b{id}-
-            # file, or an UNPREFIXED file (the state-at-floor base /
-            # unversioned appends — part of EVERY snapshot, so deleting
-            # one silently changes even the at-floor read; r14 review
-            # pass 3). Only a crashed writer's uncommitted b{id}- orphans
-            # are not table state and exempt.
-            for st in _visible_files(fs, Path(posixpath.join(self.path, rel))):
-                name = st.getPath().getName()
-                if name.startswith("b") and "-" in name:
-                    bid = name[1 : name.index("-")]
-                    if bid.isdigit():
-                        if int(bid) in committed:
-                            return True
-                        continue  # uncommitted orphan: not table state
-                return True  # unprefixed: in every snapshot
-            return False
-
-        if victims and committed and any(map(_erases_snapshot_file, victims)):
-            # the drop erases snapshot-visible files: states at or below
-            # the current head can no longer be reconstructed for them
-            # (the same partial-collapse argument as a per-leaf
-            # overwrite), and restore() deleting the SURVIVING prefixed
-            # files would fabricate a state that never existed — advance
-            # the floor row-CHANGING so time travel refuses loudly
-            # instead of silently serving post-delete state (r14 review).
-            # Floor FIRST: a crash mid-delete then over-refuses (loud)
-            # rather than leaving collapsed history readable (silent).
+        if victims and self.committed_batches():
+            # every victim holds a live file (the leaves come from the
+            # live index): a committed batch's b{id}- file or an
+            # unprefixed one, part of every snapshot (r14 review pass
+            # 3). Dropping it erases snapshot-visible files, so states
+            # at or below the current head can no longer be
+            # reconstructed for them (the same partial-collapse argument
+            # as a per-leaf overwrite), and restore() deleting the
+            # SURVIVING prefixed files would fabricate a state that
+            # never existed — advance the floor row-CHANGING so time
+            # travel refuses loudly instead of silently serving
+            # post-delete state (r14 review). Floor FIRST: a crash
+            # mid-delete then over-refuses (loud) rather than leaving
+            # collapsed history readable (silent).
             self._advance_history_floor(exact=False)
         for rel in sorted(victims):
             fs.delete(Path(posixpath.join(self.path, rel)), True)
@@ -1556,30 +1557,19 @@ class PartitionedTable:
 
     def _live_file_statuses(self) -> list[tuple[str, object]]:
         """(root-relative path, Hadoop FileStatus) of every LIVE data
-        file — THE single liveness filter (unprefixed files plus
-        ``b{id}-`` files whose batch committed; uncommitted partial
-        publishes excluded). Shared by :meth:`_live_data_files` and the
-        Delta-log exporter's file inventory, so liveness semantics can
-        never diverge between read() maintenance and the exported
-        snapshot (r14 review pass 5 — two hand-rolled copies of this
-        filter had already needed coordinated fixes once)."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        root = Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(root):
-            return []
+        file — THE single liveness filter over the :func:`_data_files`
+        inventory (unprefixed files plus ``b{id}-`` files whose batch
+        committed; uncommitted partial publishes excluded). Shared by
+        :meth:`_live_data_files` and the Delta-log exporter, so liveness
+        semantics can never diverge between read() maintenance and the
+        exported snapshot (r14 review pass 5)."""
+        fs, Path = self._fs()
         committed = set(self.committed_batches())
-        root_path = root.toUri().getPath()
-        out: list[tuple[str, object]] = []
-        for st in _visible_files(fs, root):
-            p = st.getPath()
-            name = p.getName()
-            if name.startswith("b") and "-" in name:
-                bid = name[1 : name.index("-")]
-                if bid.isdigit() and int(bid) not in committed:
-                    continue
-            out.append((posixpath.relpath(p.toUri().getPath(), root_path), st))
-        return out
+        return [
+            (rel, st)
+            for rel, st, bid in _data_files(fs, Path(self.path))
+            if bid is None or bid in committed
+        ]
 
     def _live_data_files(self) -> dict[str, list[str]]:
         """{raw leaf dir ('' for unpartitioned): [absolute file paths]}
@@ -1590,8 +1580,7 @@ class PartitionedTable:
         no longer reclaim them."""
         out: dict[str, list[str]] = {}
         for rel, st in self._live_file_statuses():
-            leaf = "/".join(rel.split("/")[:-1])
-            out.setdefault(leaf, []).append(st.getPath().toString())
+            out.setdefault(posixpath.dirname(rel), []).append(st.getPath().toString())
         return out
 
     def _leaf_scopes_counts(
@@ -1614,11 +1603,7 @@ class PartitionedTable:
         ).items():
             if not leaf or not files:
                 continue
-            vals: dict[str, str] = {}
-            for seg in leaf.split("/"):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    vals[k] = urllib.parse.unquote(v)
+            vals = _leaf_values(leaf)
             if set(vals) >= set(self.partition_cols):
                 key = tuple((c, vals[c]) for c in self.partition_cols)
                 out[leaf] = (key, len(files))
@@ -1652,9 +1637,10 @@ class PartitionedTable:
         or above the history floor; below the floor the prefixes are
         gone (possibly only partially, after a per-leaf rewrite) and the
         read refuses loudly instead of returning a silently partial
-        snapshot — the Delta OPTIMIZE + VACUUM retention trade. The
-        listing is O(files) driver-side metadata (Delta's log avoids the
-        walk but resolves to the same file set).
+        snapshot — the Delta OPTIMIZE + VACUUM retention trade. The file
+        set filters the :func:`_data_files` inventory, O(files)
+        driver-side metadata (Delta's log avoids the walk but resolves
+        to the same file set).
         """
         wanted = {b for b in self.committed_batches() if b <= batch_id}
         if not wanted:
@@ -1684,20 +1670,14 @@ class PartitionedTable:
                 "reflect post-rewrite state. Only read() serves this table's "
                 "current state; snapshots strictly above the floor are exact."
             )
-        Path = _fs_class(self.spark._jvm, "Path")
-        root = Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        files = []
-        for st in _visible_files(fs, root):  # never load sidecar (_dv) files
-            p = st.getPath()
-            name = p.getName()
-            if name.startswith("b") and "-" in name and name[1 : name.index("-")].isdigit():
-                if int(name[1 : name.index("-")]) in wanted:
-                    files.append(p.toString())
-            else:
-                # unprefixed: rewritten state-at-floor base (or an
-                # unversioned append) — part of every snapshot ≥ floor
-                files.append(p.toString())
+        fs, Path = self._fs()
+        files = [
+            st.getPath().toString()
+            for _, st, bid in _data_files(fs, Path(self.path))
+            # unprefixed: the rewritten state-at-floor base (or an
+            # unversioned append), part of every snapshot ≥ floor
+            if bid is None or bid in wanted
+        ]
         if not files:
             raise ValueError(
                 f"read_as_of({batch_id}) at {self.path}: batches {sorted(wanted)} "
@@ -1752,21 +1732,14 @@ class PartitionedTable:
         victims = {b for b in committed if b > batch_id}
         if not victims:
             return 0
-        Path = _fs_class(self.spark._jvm, "Path")
-        root = Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        # inventory: which victim batches still have their prefixed files?
+        fs, Path = self._fs()
+        # which victim batches still have their prefixed files? (a _dv
+        # sidecar file is not in the inventory, so one whose id collides
+        # with a victim is neither deleted nor masks the refusal below)
         victim_files: dict[int, list] = {b: [] for b in victims}
-        # a _dv sidecar file whose batch id collides with a victim id
-        # must neither be deleted nor mask the collapsed-history
-        # refusal — sidecar ids are an independent sequence
-        for st in _visible_files(fs, root):
-            pth = st.getPath()
-            name = pth.getName()
-            if name.startswith("b") and "-" in name:
-                bid = name[1 : name.index("-")]
-                if bid.isdigit() and int(bid) in victims:
-                    victim_files[int(bid)].append(pth)
+        for _, st, bid in _data_files(fs, Path(self.path)):
+            if bid in victim_files:
+                victim_files[bid].append(st.getPath())
         metrics = self.batch_metrics()
         collapsed = [
             b
@@ -1805,8 +1778,8 @@ class PartitionedTable:
         2. the remaining ``_staging/`` trees — a writer that crashed or
            lost before its commit marker leaves its staged batch there;
            a replay stages afresh, so anything present now is garbage;
-        3. orphaned data files: a ``b{id}-`` file in the table whose
-           batch has NO commit marker. ``append_batch`` never publishes
+        3. orphaned data files: a ``b{id}-`` file of the inventory
+           (:func:`_data_files`) whose batch has NO commit marker. ``append_batch`` never publishes
            before its commit, but a table written by an older publish-
            then-mark version can hold such partial publishes, and
            ``read()`` would count their rows. Committed batches' files
@@ -1815,16 +1788,12 @@ class PartitionedTable:
         Like Delta's VACUUM, the caller must not run it concurrently
         with an active writer on the same table (a writer mid-stage
         would lose its staging dir and fail; its replay re-stages)."""
-        Path = _fs_class(self.spark._jvm, "Path")
-        root = Path(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         # recovery FIRST, even when the root is missing: an unpartitioned
         # overwrite/compact/purge crashing between its two root renames
         # leaves the table only in the .preoverwrite shadow and staging,
         # exactly the state recover() rolls forward
         self.recover()
-        if not fs.exists(root):
-            return 0
         deleted = 0
         staging_root = Path(posixpath.join(self.path, "_staging"))
         if fs.exists(staging_root):
@@ -1838,18 +1807,11 @@ class PartitionedTable:
                     deleted += 1
                 fs.delete(st.getPath(), True)
         committed = set(self.committed_batches())
-        orphans = []
-        # skip anything under a hidden segment — a nested sidecar's
-        # (e.g. _dv's) committed files carry batch ids from an
-        # INDEPENDENT sequence and must never be judged orphans
-        # against the base table's committed set (ADVICE r11)
-        for st in _visible_files(fs, root):
-            p = st.getPath()
-            name = p.getName()
-            if name.startswith("b") and "-" in name:
-                bid = name[1 : name.index("-")]
-                if bid.isdigit() and int(bid) not in committed:
-                    orphans.append(p)
+        orphans = [
+            st.getPath()
+            for _, st, bid in _data_files(fs, Path(self.path))
+            if bid is not None and bid not in committed
+        ]
         for p in orphans:
             fs.delete(p, False)
             deleted += 1
@@ -1879,10 +1841,9 @@ class PartitionedTable:
         file and runs no Spark job; a missing root, or one holding only
         hidden sidecar state (``_commits``, ``_delta_log``,
         ``_staging``), does not exist."""
-        root = _fs_class(self.spark._jvm, "Path")(self.path)
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, Path = self._fs()
         try:
-            return next(_visible_files(fs, root), None) is not None
+            return next(_visible_files(fs, Path(self.path)), None) is not None
         except Py4JJavaError:
             return False  # no root (or a whole-root swap moved it mid-walk)
 
@@ -2144,11 +2105,6 @@ def change_feed(
     snapshot read per delete version. History collapse (compact/purge
     rewrote the prefixed files) raises through ``read_as_of``'s
     contract rather than returning a silently partial feed."""
-    spark = table.spark
-    Path = _fs_class(spark._jvm, "Path")
-    root = Path(table.path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-
     floor = table._history_floor()
     if from_batch < floor:
         raise ValueError(
@@ -2174,14 +2130,10 @@ def change_feed(
 
     # inserts: the b{id}- files of each base version in the window
     files_by_version: dict[int, list[str]] = {b: [] for b in base_versions}
-    if fs.exists(root):
-        for st in _visible_files(fs, root):  # _dv files are delete, not insert, state
-            p = st.getPath()
-            name = p.getName()
-            if name.startswith("b") and "-" in name:
-                bid = name[1 : name.index("-")]
-                if bid.isdigit() and int(bid) in files_by_version:
-                    files_by_version[int(bid)].append(p.toString())
+    fs, Path = table._fs()
+    for _, st, bid in _data_files(fs, Path(table.path)):  # _dv files are delete state
+        if bid in files_by_version:
+            files_by_version[bid].append(st.getPath().toString())
 
     applied = dv.applied_through() if dv is not None else -1
     dv_metrics = dv.sidecar.batch_metrics() if dv is not None else {}

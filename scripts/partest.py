@@ -11,7 +11,8 @@ collide; all Spark ports are randomized by default).
 
 Balancing: greedy assignment by recorded per-file durations when
 ``.partest_durations.json`` exists (written by this script after every
-full run), else by file size as a first-run proxy.
+green run with no extra pytest args), else by file size as a first-run
+proxy.
 
 Usage: python scripts/partest.py [N_WORKERS] [extra pytest args...]
 Exit code: 0 iff every worker passed.
@@ -108,7 +109,9 @@ def main() -> int:
                     continue
                 fname = os.path.basename(parts[-1].split("::")[0])
                 per_file[fname] = per_file.get(fname, 0.0) + sec
-    if rc == 0 and per_file:
+    # weights come only from a green, unfiltered run: extra pytest args
+    # (-k, -m, ...) would record the durations of a slice as the file's
+    if rc == 0 and per_file and not extra:
         json.dump(per_file, open(DURATIONS, "w"), indent=0, sort_keys=True)
     print(f"partest: {len(groups)} workers, wall {time.time() - t0:.0f}s, rc={rc}")
     # Canonical test count: summing the workers' per-shard "N passed"

@@ -72,3 +72,21 @@ def test_constraints_persist_and_drop(spark, table, tmp_path):
     assert fresh.append_batch(_rows(spark, [-1]), 0)
     # the sidecar is a _-prefixed file: invisible to the data scan
     assert fresh.read().count() == 1
+
+
+def test_constraints_survive_crash_between_delete_and_rename(spark, table, tmp_path):
+    """A replace that crashed after deleting ``_constraints.json`` and
+    before renaming its tmp file into place leaves only the tmp file:
+    the constraints it holds must still apply."""
+    import json
+    import os
+
+    table.add_check_constraint("k_positive", "k > 0")
+    main = tmp_path / "t" / "_constraints.json"
+    newer = {"seq": 2, "constraints": {"k_positive": "k > 0", "k_small": "k < 100"}}
+    (tmp_path / "t" / "_constraints.json.tmp-crash").write_text(json.dumps(newer))
+    os.remove(main)
+    assert table.check_constraints() == newer["constraints"]
+    with pytest.raises(CheckConstraintViolation, match="k_small"):
+        table.append_batch(_rows(spark, [1, 500]), 0)
+    assert table.committed_batches() == []

@@ -22,10 +22,6 @@ from incremental_dagster_delta_spark.tableio import PartitionedTable
 
 import pytest
 
-# Excluded from the default run so `pytest tests/` fits the driver's
-# verify budget (pyproject addopts); scripts/partest.py runs it.
-pytestmark = pytest.mark.slow
-
 
 def _make_table(spark, path: str, partition_cols=("day",)) -> PartitionedTable:
     table = PartitionedTable(spark, path, list(partition_cols))

@@ -34,10 +34,6 @@ from incremental_dagster_delta_spark.deltalog import (
 )
 from incremental_dagster_delta_spark.tableio import PartitionedTable
 
-# Excluded from the default run so `pytest tests/` fits the driver's
-# verify budget (pyproject addopts); scripts/partest.py runs it.
-pytestmark = pytest.mark.slow
-
 SCHEMA = "k long, payload string, day string"
 DAYS = ("2024-06-01", "2024-06-02", "2024-06-03")
 

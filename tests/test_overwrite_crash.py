@@ -21,12 +21,6 @@ import shutil
 
 from incremental_dagster_delta_spark.tableio import PartitionedTable
 
-import pytest
-
-# Excluded from the default run so `pytest tests/` fits the driver's
-# verify budget (pyproject addopts); scripts/partest.py runs it.
-pytestmark = pytest.mark.slow
-
 DAY1, DAY2 = "2024-01-01", "2024-01-02"
 
 

@@ -19,10 +19,6 @@ from incremental_dagster_delta_spark.tableio import (
     change_feed,
 )
 
-# Excluded from the default run so `pytest tests/` fits the driver's
-# verify budget (pyproject addopts); scripts/partest.py runs it.
-pytestmark = pytest.mark.slow
-
 SCHEMA = "k long, payload string, day string"
 
 

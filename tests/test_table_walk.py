@@ -3,21 +3,30 @@
 ``exists()`` is "the hidden-pruning walk yields a file", answered from
 the filesystem alone; ``_live_file_statuses`` (the liveness filter behind
 maintenance rewrites and the Delta-log export) must see exactly the files
-a plain ``os.walk`` that prunes ``_``/``.`` entries sees. The last test
-pins the pipeline's export of a table whose last visible file went away.
+a plain ``os.walk`` that prunes ``_``/``.`` entries sees. One planted
+tree pins every consumer of the file inventory (snapshot, change feed,
+leaf listing, log export, vacuum, restore) against an ``os.walk``
+reference. The last test pins the pipeline's export of a table whose
+last visible file went away.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import urllib.parse
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from incremental_dagster_delta_spark.deltalog import _replay
+from incremental_dagster_delta_spark.deltalog import DeltaLogExporter, _replay
 from incremental_dagster_delta_spark.streaming.pipeline import IngestPipeline
-from incremental_dagster_delta_spark.tableio import PartitionedTable
+from incremental_dagster_delta_spark.tableio import (
+    HIVE_NULL_PARTITION,
+    PartitionedTable,
+    change_feed,
+)
 
 
 def _jobs_in(spark, fn):
@@ -90,6 +99,102 @@ def test_live_file_statuses_match_os_walk(spark, tmp_path):
     assert got == expected
     assert {rel.split("/")[0] for rel in got} == {"day=d1", "day=d2"}
     assert len(got) >= 4  # both batches, both days
+
+
+def _walk_reference(root):
+    """{root-relative path: batch id or None} of every visible file, by
+    ``os.walk`` pruning ``_``/``.`` entries."""
+    out = {}
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        for name in filenames:
+            if not name.startswith(("_", ".")):
+                m = re.match(r"b(\d+)-", name)
+                rel = os.path.relpath(os.path.join(dirpath, name), root)
+                out[rel] = int(m.group(1)) if m else None
+    return out
+
+
+def _day_of(rel):
+    """The partition value a file's leaf holds: unescaped, null for hive's sentinel."""
+    day = urllib.parse.unquote(os.path.dirname(rel).split("=", 1)[1])
+    return None if day == HIVE_NULL_PARTITION else day
+
+
+def _file_rows(root, rels):
+    """Sorted (w, day) rows of ``rels``, read with pyarrow."""
+    return sorted(
+        (w, _day_of(rel))
+        for rel in rels
+        for w in pq.read_table(os.path.join(root, rel)).column("w").to_pylist()
+    )
+
+
+def test_planted_tree_every_inventory_consumer_agrees(spark, tmp_path):
+    root = tmp_path / "t"
+    t = PartitionedTable(spark, str(root), ["day"])
+    schema = "w string, day string"
+    t.append_batch(spark.createDataFrame([("a0", "a:b"), ("n0", None)], schema), 0)
+    t.append_batch(spark.createDataFrame([("a1", "a:b"), ("n1", None)], schema), 1)
+    leaves = sorted(os.listdir(root))
+    assert "day=a%3Ab" in leaves and f"day={HIVE_NULL_PARTITION}" in leaves
+    # an unprefixed file: part of every snapshot
+    pq.write_table(pa.table({"w": ["u"]}), root / "day=a%3Ab" / "part-unversioned.parquet")
+    # an uncommitted partial, alone in its leaf
+    os.makedirs(root / "day=p")
+    pq.write_table(pa.table({"w": ["p9"]}), root / "day=p" / "b9-tok-part-00000.parquet")
+    # a sidecar file whose id collides with base batch 1
+    os.makedirs(root / "_dv")
+    pq.write_table(pa.table({"w": ["dv"]}), root / "_dv" / "b1-tok-part-00000.parquet")
+
+    ref = _walk_reference(root)
+    committed = set(t.committed_batches())
+    assert committed == {0, 1}
+    assert sorted(set(ref.values()), key=str) == [0, 1, 9, None]
+    live = {rel for rel, bid in ref.items() if bid is None or bid in committed}
+
+    for k in (0, 1):
+        snap = [rel for rel, bid in ref.items() if bid is None or (bid in committed and bid <= k)]
+        got = sorted((r["w"], r["day"]) for r in t.read_as_of(k).collect())
+        assert got == _file_rows(root, snap)
+
+    feed = change_feed(t, None, -1, 1)
+    got = sorted((r["w"], r["day"], r["_commit_version"]) for r in feed.collect())
+    want = sorted(
+        (w, day, bid)
+        for rel, bid in ref.items()
+        if bid in committed
+        for w, day in _file_rows(root, [rel])
+    )
+    assert got == want
+    assert {r["_change_type"] for r in feed.collect()} == {"insert"}
+
+    want_leaves = sorted({urllib.parse.unquote(os.path.dirname(rel)[4:]) for rel in live})
+    assert t.leaf_partitions() == [{"day": d} for d in want_leaves]
+    assert "p" not in want_leaves
+
+    DeltaLogExporter(t).export()
+    state = _replay(os.path.join(root, "_delta_log"))[0]
+    assert {rel: a["partitionValues"] for rel, a in state.items()} == {
+        rel: {"day": _day_of(rel)} for rel in live
+    }
+    assert {"day": None} in [a["partitionValues"] for a in state.values()]
+
+    orphans = [rel for rel, bid in ref.items() if bid is not None and bid not in committed]
+    assert t.vacuum() == len(orphans) == 1
+    assert _walk_reference(root) == {rel: bid for rel, bid in ref.items() if rel not in orphans}
+
+    victims = [rel for rel, bid in ref.items() if bid == 1]
+    assert t.restore(0) == 1
+    assert _walk_reference(root) == {
+        rel: bid for rel, bid in ref.items() if rel not in orphans and rel not in victims
+    }
+    assert (root / "_dv" / "b1-tok-part-00000.parquet").exists()
+    assert sorted((r["w"], r["day"]) for r in t.read().collect()) == [
+        ("a0", "a:b"),
+        ("n0", None),
+        ("u", "a:b"),
+    ]
 
 
 def test_emptied_table_exports_remove_only_version(spark, tmp_path):
