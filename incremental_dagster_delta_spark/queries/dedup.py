@@ -214,7 +214,7 @@ def ngram_jaccard_pairs(
     ``cache_key=None`` (or a version-qualified key) instead."""
     from incremental_dagster_delta_spark.tables import SHINGLE_TASK_BYTES, fan_out, materialize_release, sized_shuffle
 
-    with sized_shuffle(spark, docs):
+    with sized_shuffle(docs):
         return _ngram_jaccard_pairs_impl(
             spark, docs, threshold, df_cap, cache_key, fan_out, materialize_release
         )

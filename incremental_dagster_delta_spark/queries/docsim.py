@@ -80,7 +80,7 @@ def tfidf_cosine_pairs(
     the module docstring."""
     from incremental_dagster_delta_spark.tables import SHINGLE_TASK_BYTES, fan_out, materialize_release, sized_shuffle
 
-    with sized_shuffle(spark, docs):
+    with sized_shuffle(docs):
         return _tfidf_cosine_pairs_impl(
             spark, docs, threshold, df_cap, gamma, fan_out, materialize_release
         )

@@ -69,7 +69,7 @@ def query(
 
             @functools.wraps(fn)
             def run(spark, sf_dir):
-                with sized_shuffle(spark, load_table(spark, sf_dir, size_from)):
+                with sized_shuffle(load_table(spark, sf_dir, size_from)):
                     return fn(spark, sf_dir)
 
         QUERIES[name] = QuerySpec(

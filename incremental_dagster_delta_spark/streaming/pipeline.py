@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from incremental_dagster_delta_spark.functions import expand_time
 from incremental_dagster_delta_spark.sources.ingest import read_text_files, stream_text_files
 from incremental_dagster_delta_spark.tableio import PartitionedTable
+from incremental_dagster_delta_spark.tables import sized_shuffle
 
 PROCESSED_PARTITIONS = ["year", "month", "day", "word_length"]  # processed.py:34
 
@@ -157,67 +158,88 @@ class IngestPipeline:
         the set difference (sensors.py:53) for us.
 
         Writes are idempotent per ``batch_id`` (``append_batch``), so a
-        crash-and-replay between the three table writes cannot duplicate
-        rows — parity with the reference's transactional Delta writes.
-        Each output is repartitioned to its day partitioning before the
-        write: wholetext input arrives one-row-per-file, and writing it
-        as-scheduled would emit one tiny parquet file per (task × leaf
-        partition) — the small-files failure mode SURVEY.md §7.7 flags at
-        100 TB scale.
+        crash-and-replay between the table writes cannot duplicate rows —
+        parity with the reference's transactional Delta writes.
+
+        The batch runs under the small-input policy of its OWN session
+        (``sized_shuffle(batch_df)``: a ``foreachBatch`` DataFrame is bound
+        to the stream's cloned session), and its new rows are computed
+        once: deduplicated against listing, hash-partitioned into one
+        partition per day and cached by the count that tests emptiness.
+        All four outputs are narrow projections of that one frame
+        (:meth:`_publish`), so each write is one job that reads the cache,
+        and a day's rows sit in one task — one parquet file per leaf
+        partition per batch, not one per (task × leaf), the small-files
+        failure mode SURVEY.md §7.7 flags at 100 TB scale.
         """
-        raw = batch_df = batch_df.persist()
-        try:
-            # the batch's days (driver-side distinct over a micro-batch —
-            # bounded) double as the emptiness probe, and the collect
-            # fills the cache the writes below read
-            days = sorted(r["day"] for r in batch_df.select("day").distinct().collect())
-            if not days:
-                return
-            # exactly-once across the refresh/stream seam (r15 review):
-            # refresh() consumes whatever source files exist, including
-            # files the source checkpoint has not delivered yet — those
-            # are already recorded in listing, and appending them again
-            # here would double their rows. The anti-join is pruned to
-            # the batch's day partitions, so at scale it reads only the
-            # listing leaves this batch touches.
-            if self.listing.exists():
-                in_list = ", ".join(f"'{d}'" for d in days)
-                seen = self.listing.read(f"day IN ({in_list})").select(
-                    "filename", "day"
-                )
-                batch_df = batch_df.join(seen, ["filename", "day"], "left_anti")
-                if batch_df.isEmpty():
-                    return  # every file already ingested by a refresh
-            proc = to_processed(batch_df).repartition("year", "month", "day")
-            if self.expectations:
-                frames = self._split(proc)
-                self.quarantine.append_batch(
-                    self._quarantine_frame(frames.quarantine), batch_id
-                )
-                proc = frames.good
-            self.processed.append_batch(proc, batch_id)
-            if self.derive_backwards:
-                self.backwards.append_batch(to_backwards(proc), batch_id)
-            self.listing.append_batch(batch_df.select("filename", "day").repartition("day"), batch_id)
-            self._export_logs()
-        finally:
-            raw.unpersist()
+        with sized_shuffle(batch_df):
+            raw = batch_df.persist()
+            try:
+                # the batch's days (driver-side distinct over a micro-batch
+                # — bounded) double as the emptiness probe, and the collect
+                # fills the cache the dedup below reads
+                days = sorted(r["day"] for r in raw.select("day").distinct().collect())
+                if not days:
+                    return
+                fresh = raw
+                # exactly-once across the refresh/stream seam (r15 review):
+                # refresh() consumes whatever source files exist, including
+                # files the source checkpoint has not delivered yet — those
+                # are already recorded in listing, and appending them again
+                # here would double their rows. The anti-join is pruned to
+                # the batch's day partitions, so at scale it reads only the
+                # listing leaves this batch touches.
+                if self.listing.exists():
+                    in_list = ", ".join(f"'{d}'" for d in days)
+                    seen = self.listing.read(f"day IN ({in_list})").select(
+                        "filename", "day"
+                    )
+                    fresh = raw.join(seen, ["filename", "day"], "left_anti")
+                fresh = fresh.repartition(len(days), "day").persist()
+                try:
+                    # one job: the emptiness test fills the cache
+                    if not fresh.count():
+                        return  # every file already ingested by a refresh
+                    raw.unpersist()  # one batch copy cached at a time
+                    self._publish(
+                        fresh,
+                        lambda t, df: t.append_batch(df, batch_id),
+                        backwards=self.derive_backwards,
+                    )
+                finally:
+                    fresh.unpersist()
+            finally:
+                raw.unpersist()
 
-    def _split(self, proc: DataFrame):
-        from incremental_dagster_delta_spark.quality import split as q_split
+    def _publish(self, fresh: DataFrame, write, backwards: bool) -> None:
+        """Write one commit wave from its deduplicated source rows.
 
-        return q_split(proc, self.expectations)
+        ``fresh`` holds ``(filename, word, word_length, day)``; every
+        output is a narrow projection of it, written with
+        ``write(table, df)`` in the order quarantine, processed,
+        backwards, listing — listing last, so a file counts as consumed
+        only once its rows are in. Quarantined rows are partitioned by
+        the FULL date: the processed schema's ``day`` is the expanded
+        day-of-month string ('26'), so partitioning quarantine by it
+        collided different months in one leaf — inconsistent with listing
+        and unprunable by date (r15 review)."""
+        proc = to_processed(fresh)
+        if self.expectations:
+            from incremental_dagster_delta_spark.quality import split
 
-    @staticmethod
-    def _quarantine_frame(quarantine: DataFrame) -> DataFrame:
-        """Quarantined rows partitioned by the FULL date: the processed
-        schema's ``day`` is the expanded day-of-month string ('26'), so
-        partitioning quarantine by it collided different months in one
-        leaf — inconsistent with listing and unprunable by date (r15
-        review). Rebuild the date from the expanded columns."""
-        return quarantine.withColumn(
-            "day", F.concat_ws("-", "year", "month", "day")
-        ).repartition("day")
+            frames = split(proc, self.expectations)
+            write(
+                self.quarantine,
+                frames.quarantine.withColumn(
+                    "day", F.concat_ws("-", "year", "month", "day")
+                ),
+            )
+            proc = frames.good
+        write(self.processed, proc)
+        if backwards:
+            write(self.backwards, to_backwards(proc))
+        write(self.listing, fresh.select("filename", "day"))
+        self._export_logs()
 
     def run_incremental(
         self, timeout_sec: int = 300, max_files_per_trigger: int | None = None
@@ -264,34 +286,36 @@ class IngestPipeline:
         )
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            out = to_backwards(batch_df)
-            # refresh() rewrites processed's day into NEW parquet file
-            # names and writes backwards for that day directly; this
-            # file-stream then re-discovers the refreshed files as
-            # unseen and would append their rows a second time (r15
-            # review). Anti-join against the rows already present for
-            # the batch's day partitions (per-file grain: a file's rows
-            # land together, so filename+date identifies them).
-            if self.backwards.exists():
+            with sized_shuffle(batch_df):
+                out = to_backwards(batch_df)
+                # the batch's day partitions double as the emptiness probe
                 triples = sorted(
                     (r["year"], r["month"], r["day"])
                     for r in out.select("year", "month", "day").distinct().collect()
                 )
-                pred = " OR ".join(
-                    f"(year = '{y}' AND month = '{m}' AND day = '{d}')"
-                    for y, m, d in triples
+                if not triples:
+                    return
+                # refresh() rewrites processed's day into NEW parquet file
+                # names and writes backwards for that day directly; this
+                # file-stream then re-discovers the refreshed files as
+                # unseen and would append their rows a second time (r15
+                # review). Anti-join against the rows already present for
+                # the batch's day partitions (per-file grain: a file's rows
+                # land together, so filename+date identifies them).
+                if self.backwards.exists():
+                    pred = " OR ".join(
+                        f"(year = '{y}' AND month = '{m}' AND day = '{d}')"
+                        for y, m, d in triples
+                    )
+                    seen = self.backwards.read(pred).select(
+                        "filename", "year", "month", "day"
+                    )
+                    out = out.join(
+                        seen, ["filename", "year", "month", "day"], "left_anti"
+                    )
+                self.backwards.append_batch(
+                    out.repartition(len(triples), "year", "month", "day"), batch_id
                 )
-                seen = self.backwards.read(pred).select(
-                    "filename", "year", "month", "day"
-                )
-                out = out.join(
-                    seen, ["filename", "year", "month", "day"], "left_anti"
-                )
-            self.backwards.append_batch(
-                out.repartition("year", "month", "day"), batch_id
-            )
 
         q = (
             stream.writeStream.foreachBatch(handle)
@@ -324,28 +348,28 @@ class IngestPipeline:
         anti-joins against listing so their later stream delivery is a
         no-op; the cascade topology's re-discovery of the refreshed
         files is likewise absorbed by its per-file anti-join.
+
+        Like a tick, the day's files are read once: they run under the
+        small-input policy (``sized_shuffle(files)``), are gathered into
+        one cached partition, and all four overwrites are projections of
+        that frame (:meth:`_publish`) — the first write fills the cache,
+        the rest read it, each in one job.
         """
         y, m, d = day.split("-")
-        files = (
-            read_text_files(self.spark, self.ingest_root)
-            .where(F.col("day") == day)
-            .persist()
-        )
-        try:
-            proc = to_processed(files).repartition("year", "month", "day")
-            if self.expectations:
-                frames = self._split(proc)
-                self.quarantine.overwrite_partitions(
-                    self._quarantine_frame(frames.quarantine), day=day
+        files = read_text_files(self.spark, self.ingest_root).where(F.col("day") == day)
+        scopes = {
+            self.quarantine.path: {"day": day},
+            self.processed.path: {"year": y, "month": m, "day": d},
+            self.backwards.path: {"year": y, "month": m, "day": d},
+            self.listing.path: {"day": day},
+        }
+        with sized_shuffle(files):
+            fresh = files.repartition(1, "day").persist()
+            try:
+                self._publish(
+                    fresh,
+                    lambda t, df: t.overwrite_partitions(df, **scopes[t.path]),
+                    backwards=True,
                 )
-                proc = frames.good
-            self.processed.overwrite_partitions(proc, year=y, month=m, day=d)
-            self.backwards.overwrite_partitions(
-                to_backwards(proc), year=y, month=m, day=d
-            )
-            self.listing.overwrite_partitions(
-                files.select("filename", "day").repartition("day"), day=day
-            )
-            self._export_logs()
-        finally:
-            files.unpersist()
+            finally:
+                fresh.unpersist()

@@ -303,12 +303,12 @@ def literal_df(spark: SparkSession, rows, schema) -> DataFrame:
 
 @contextmanager
 def sized_shuffle(
-    spark: SparkSession,
     df: DataFrame,
     expansion: float = 4.0,
     per_partition_bytes: int = 32 << 20,
 ):
-    """The scoped small-input execution policy. Inside the scope:
+    """The scoped small-input execution policy, set on the session that
+    runs ``df``'s plan (``df.sparkSession``). Inside the scope:
 
     - ``spark.sql.shuffle.partitions`` is sized to the volume THIS query
       will actually shuffle: ``expansion ×`` the input's on-disk bytes
@@ -344,11 +344,17 @@ def sized_shuffle(
     alone rather than override with an under-count — pinning the floor
     there would force a possibly-multi-GB shuffle into a handful of
     partitions (r15 review) with AQE unable to split its skew.
+
+    The scope follows ``df`` rather than taking a session argument: a
+    ``foreachBatch`` body receives its DataFrame bound to the stream's
+    cloned session, whose confs a caller's ``spark`` handle neither sees
+    nor sets.
     """
     byts = _input_bytes(df)
     if byts is None:
         yield
         return
+    spark = df.sparkSession
     floor = max(2, spark.sparkContext.defaultParallelism // 4)
     n = max(floor, min(100_000, int(byts * expansion / per_partition_bytes) + 1))
     confs = {"spark.sql.shuffle.partitions": str(n)}

@@ -59,7 +59,7 @@ def test_scope_at_floor_disables_aqe_and_restores(spark, sf_dir):
     docs = tables.load_table(spark, sf_dir, "documents")
     before = _confs(spark)
     floor = max(2, spark.sparkContext.defaultParallelism // 4)
-    with tables.sized_shuffle(spark, docs):
+    with tables.sized_shuffle(docs):
         assert _confs(spark) == ("false", str(floor))
     assert _confs(spark) == before
 
@@ -68,7 +68,7 @@ def test_scope_restores_when_body_raises(spark, sf_dir):
     docs = tables.load_table(spark, sf_dir, "documents")
     before = _confs(spark)
     with pytest.raises(RuntimeError, match="boom"):
-        with tables.sized_shuffle(spark, docs):
+        with tables.sized_shuffle(docs):
             assert spark.conf.get(AQE) == "false"
             raise RuntimeError("boom")
     assert _confs(spark) == before
@@ -80,7 +80,7 @@ def test_above_floor_keeps_aqe_on(spark, sf_dir, monkeypatch):
     # an estimated shuffle (4 x input bytes) of floor x 32 MB plus one byte
     monkeypatch.setattr(tables, "_input_bytes", lambda df: floor * (8 << 20) + 1)
     before = _confs(spark)
-    with tables.sized_shuffle(spark, docs):
+    with tables.sized_shuffle(docs):
         assert spark.conf.get(AQE) == before[0] == "true"
         assert int(spark.conf.get(PARTITIONS)) == floor + 1
     assert _confs(spark) == before
@@ -90,7 +90,7 @@ def test_unknown_size_leaves_confs_untouched(spark, sf_dir, monkeypatch):
     docs = tables.load_table(spark, sf_dir, "documents")
     monkeypatch.setattr(tables, "_input_bytes", lambda df: None)
     before = _confs(spark)
-    with tables.sized_shuffle(spark, docs):
+    with tables.sized_shuffle(docs):
         assert _confs(spark) == before
     assert _confs(spark) == before
 
@@ -104,3 +104,28 @@ def test_size_from_wraps_registered_fn(spark, sf_dir):
     assert spec.size_from == "documents"
     assert spec.fn is not unigram_lm.q_unigram_lm
     assert spec.fn.__wrapped__ is unigram_lm.q_unigram_lm
+
+
+@pytest.mark.parametrize("raises", [False, True])
+def test_scope_acts_on_the_dataframes_session(spark, sf_dir, raises):
+    """A ``foreachBatch`` body gets a DataFrame bound to the stream's
+    cloned session; the scope must size that session, not the caller's."""
+    other = spark.newSession()
+    docs = tables.load_table(other, sf_dir, "documents")
+    floor = max(2, spark.sparkContext.defaultParallelism // 4)
+    before, other_before = _confs(spark), _confs(other)
+
+    def body():
+        with tables.sized_shuffle(docs):
+            assert _confs(other) == ("false", str(floor))
+            assert _confs(spark) == before
+            if raises:
+                raise RuntimeError("boom")
+
+    if raises:
+        with pytest.raises(RuntimeError, match="boom"):
+            body()
+    else:
+        body()
+    assert _confs(other) == other_before
+    assert _confs(spark) == before
